@@ -93,7 +93,11 @@ object Cli {
     * ([[graft.ops.IvfIndex.maintain]]) and prints the report — a
     * REBUILD RECOMMENDED line when the frozen geometry stopped
     * fitting; on the sketch/retrieval families (no drift dimension)
-    * it compacts when live shards exceed the cap. */
+    * it compacts when live shards exceed the cap. The ivf, ivfpq, ivfsq
+    * and bq kinds dispatch through one lookup of their lifecycle object
+    * ([[graft.ops.IndexLifecycle]], over the shared shard layout
+    * [[graft.ops.IndexLayout]]); lsh, simhash and bm25 keep their own
+    * calls. */
   private[graft] def indexCmd(spark: SparkSession, args: Array[String]): Unit = {
     val usage = "Cli index <status|drift|compact|maintain|rebuild> " +
       "<ivf|ivfpq|ivfsq|bq|lsh|simhash|bm25> <path> [--max-live N] " +
@@ -110,7 +114,7 @@ object Cli {
       case other => throw new IllegalArgumentException(
         s"unknown index flag '${other.mkString(" ")}' - $usage")
     }
-    import graft.ops.{BqIndex, Dedup, IvfIndex, IvfPq, IvfSq, Relevance, WriterLock}
+    import graft.ops.{Dedup, IndexLifecycle, Relevance, RetrainableIndex, WriterLock}
     // --lock: serialize this process's maintenance against other
     // cooperating CLI/cron writers on the same index (VERDICT r16 #6;
     // advisory - the CAS remains the backstop for writers that skip it)
@@ -121,34 +125,21 @@ object Cli {
     }
     require(Seq("ivf", "ivfpq", "ivfsq", "bq", "lsh", "simhash", "bm25")
       .contains(kind), s"unknown index kind '$kind' - $usage")
-    // family-specific reads: ivfpq/ivfsq carry their own completeness
-    // witnesses (codebook/sqmodel + base-shard layout), so status on a
-    // wrong-kind or crashed-save path reads missing, never healthy
-    def live(): Int = kind match {
-      case "ivf" => IvfIndex.liveShards(spark, path)
-      case "ivfpq" => IvfPq.liveShards(spark, path)
-      case "ivfsq" => IvfSq.liveShards(spark, path)
-      case "bq" => BqIndex.liveShards(spark, path)
+    // the kind's own reads: each layout kind carries its completeness
+    // witnesses (codebook/sqmodel/sigs + base-shard layout), so status
+    // on a wrong-kind or crashed-save path reads missing, never healthy
+    val lifecycle = IndexLifecycle.byKind.get(kind)
+    val trained = lifecycle.collect { case t: RetrainableIndex => t }
+    def live(): Int = lifecycle.fold(kind match {
       case "lsh" => Dedup.lshLiveShards(spark, path)
       case "simhash" => Dedup.simhashLiveShards(spark, path)
-      case "bm25" => Relevance.liveShards(spark, path)
-    }
-    def compact(): Unit = kind match {
-      case "ivf" => IvfIndex.compact(spark, path)
-      case "ivfpq" => IvfPq.compact(spark, path)
-      case "ivfsq" => IvfSq.compact(spark, path)
-      case "bq" => BqIndex.compact(spark, path)
+      case _ => Relevance.liveShards(spark, path)
+    })(_.liveShards(spark, path))
+    def compact(): Unit = lifecycle.fold(kind match {
       case "lsh" => Dedup.compactLshIndex(spark, path)
       case "simhash" => Dedup.compactSimhashIndex(spark, path)
-      case "bm25" => Relevance.compactIndex(spark, path)
-    }
-    def driftDf() = kind match {
-      case "ivf" => IvfIndex.driftStats(spark, path)
-      case "ivfpq" => IvfPq.driftStats(spark, path)
-      case "ivfsq" => IvfSq.driftStats(spark, path)
-      case _ => throw new IllegalArgumentException(
-        s"drift telemetry exists only for the IVF family, not '$kind'")
-    }
+      case _ => Relevance.compactIndex(spark, path)
+    })(_.compact(spark, path))
     cmd match {
       case "status" =>
         println(s"index $kind at $path: ${live()} live shard(s)")
@@ -167,32 +158,26 @@ object Cli {
         println(s"index $kind at $path: compacted, " +
           s"${live()} live shard(s)")
       case "drift" =>
-        driftDf().collect().foreach { r =>
+        val t = trained.getOrElse(throw new IllegalArgumentException(
+          s"drift telemetry exists only for the IVF family, not '$kind'"))
+        t.driftStats(spark, path).collect().foreach { r =>
           println(f"shard=${r.getInt(0)}%-4d n=${r.getLong(1)}%-8d " +
             f"mean_residual=${r.getDouble(2)}%.6f " +
             f"drift_ratio=${r.getDouble(3)}%.4f")
         }
-      case "rebuild" => kind match {
-        case "ivf" | "ivfpq" | "ivfsq" =>
-          locked { kind match {
-            case "ivf" => IvfIndex.rebuild(spark, path)
-            case "ivfpq" => IvfPq.rebuild(spark, path)
-            case _ => IvfSq.rebuild(spark, path)
-          } }
+      case "rebuild" => trained match {
+        case Some(t) =>
+          locked { t.rebuildStored(spark, path) }
           println(s"rebuild $kind at $path: retrained from the stored " +
             s"corpus, ${live()} live shard(s)")
-        case _ => throw new IllegalArgumentException(
+        case None => throw new IllegalArgumentException(
           s"'$kind' has no trained geometry to rebuild - its index IS " +
             "the data (sketches/postings); re-run its build over the " +
             "source corpus instead")
       }
-      case "maintain" => kind match {
-        case "ivf" | "ivfpq" | "ivfsq" =>
-          val rep = locked { kind match {
-            case "ivf" => IvfIndex.maintain(spark, path, maxLive, driftMax)
-            case "ivfpq" => IvfPq.maintain(spark, path, maxLive, driftMax)
-            case _ => IvfSq.maintain(spark, path, maxLive, driftMax)
-          } }
+      case "maintain" => trained match {
+        case Some(t) =>
+          val rep = locked { t.maintain(spark, path, maxLive, driftMax) }
           // rep.liveShards is the POST-pass count (ADVICE r16: the
           // pre-compact count beside compacted=true read as "merged
           // and still N live")
@@ -203,7 +188,7 @@ object Cli {
             println(s"REBUILD RECOMMENDED: drift ratio " +
               f"${rep.maxDriftRatio}%.4f exceeds $driftMax%.2f - the " +
               "frozen geometry no longer fits the appended distribution")
-        case _ =>
+        case None =>
           if (live() > maxLive) {
             locked { compact() }
             println(s"maintain $kind at $path: compacted to ${live()} " +

@@ -23,8 +23,9 @@ import org.apache.spark.sql.functions._
   * [[Similarity.bqKnn]], so the whole sharded lifecycle shares e20's
   * full-hash DuckDB oracle.
   *
-  * Layout (the [[IvfPq]] protocol verbatim — ShardDirs staging,
-  * MetaSwap'd meta written LAST, CAS commits, ABA layout epoch):
+  * Layout (the shared [[IndexLayout]] lifecycle of the IVF family —
+  * ShardDirs staging, MetaSwap'd meta written LAST, CAS commits, ABA
+  * layout epoch):
   * {{{
   *   path/sigs/shard=G     (id, sig long)   — the hot 16 B/row scan
   *   path/corpus/shard=G   (id, vec unit)   — rerank source only
@@ -35,74 +36,36 @@ import org.apache.spark.sql.functions._
   * exactly as [[Similarity.bqKnn]] and the e20 oracle rank it);
   * `corpus` drops zero-norm rows (they have no cosine and can never
   * appear in results — the build rule every rerank source follows). */
-object BqIndex {
+object BqIndex extends IndexLifecycle {
+
+  private[graft] def layout: IndexLayout = IndexLayout.Bq
 
   private def sigOf(vec: org.apache.spark.sql.Column) =
     graft.functions.CatalystFunctions.signBits(vec.cast("array<double>"))
 
-  /** ONE committed-meta read + completeness witness for the family
-    * (the IvfPq rule): the meta marker alone is ambiguous across the
-    * shared path layout, so require this family's base shard of the
-    * `sigs` table too — a crashed save or a different index kind at
-    * the path reads as missing, never healthy. */
-  private def metaIfCompleteBq(spark: SparkSession,
-      path: String): Option[IvfIndex.IdxMeta] =
-    IvfIndex.metaIfComplete(spark, path).filter(m =>
-      Similarity.committedParquetExists(spark, s"$path/sigs/shard=${m.base}"))
-
-  private def requireMeta(spark: SparkSession,
-      path: String): IvfIndex.IdxMeta = {
-    val m = metaIfCompleteBq(spark, path)
-    require(m.isDefined,
-      s"bq index at '$path' is missing or incomplete " +
-        "(no committed meta/sigs - saves write meta last)")
-    m.get
-  }
-
-  /** True when `path` holds a complete saved BQ index. */
-  def exists(spark: SparkSession, path: String): Boolean =
-    metaIfCompleteBq(spark, path).isDefined
-
   /** The (sig, unit-vector) frames one input delta contributes — the
-    * ONE copy of the encode rule build and append both commit. */
+    * ONE copy of the encode rule build and append both commit. Writes
+    * are sized from the plan's size estimate instead of inheriting the
+    * spread's defaultParallelism ([[IvfIndex.sizedForWrite]]). */
   private def encodeDelta(delta: DataFrame): (DataFrame, DataFrame) = {
     val d = Similarity.spreadDf(delta)
       .select(col("id"), col("vec").cast("array<double>").as("vec"))
-    (sizedForWrite(d.select(col("id"), sigOf(col("vec")).as("sig"))),
-      sizedForWrite(d.select(col("id"),
+    (IvfIndex.sizedForWrite(d.select(col("id"), sigOf(col("vec")).as("sig"))),
+      IvfIndex.sizedForWrite(d.select(col("id"),
           Similarity.unitVec(col("vec")).as("vec"))
         .filter(col("vec").isNotNull)))
   }
-
-  /** Size the shard writes from the plan's size estimate instead of
-    * inheriting the spread's defaultParallelism — the shared
-    * [[IvfIndex.sizedForWrite]] (guide §6 rationale documented
-    * there). */
-  private def sizedForWrite(df: DataFrame): DataFrame =
-    IvfIndex.sizedForWrite(df)
 
   /** Index `corpus` (id, vec) rows under `path`. Dimensions cap at 64
     * (one long of sign bits — [[graft.functions.SignBitsExpr]]'s
     * contract, checked loudly at encode). `tag` seeds the
     * append-idempotence token. */
   def build(corpus: DataFrame, path: String, tag: String = ""): Unit = {
-    val spark = corpus.sparkSession
-    IvfIndex.invalidateMeta(spark, path)
-    IvfIndex.clearStale(spark, path, Set("sigs", "corpus"))
-    locally {
-      val conf = spark.sparkContext.hadoopConfiguration
-      Seq("sigs", "corpus").foreach { t =>
-        val p = new org.apache.hadoop.fs.Path(s"$path/$t")
-        p.getFileSystem(conf).delete(p, true)
-      }
-    }
     val (sigs, unit) = encodeDelta(corpus)
     // independent sibling writes overlap (guide §2.6); meta still last
-    ParActions.run(
-      () => sigs.write.mode("overwrite").parquet(s"$path/sigs/shard=0"),
-      () => unit.write.mode("overwrite").parquet(s"$path/corpus/shard=0"))
-    IvfIndex.writeMeta(spark, s"$path/meta", 0, tag = tag,
-      epoch = IvfIndex.newEpoch())
+    layout.save(corpus.sparkSession, path, 0, tag)(root => ParActions.run(
+      () => sigs.write.mode("overwrite").parquet(s"$root/sigs/shard=0"),
+      () => unit.write.mode("overwrite").parquet(s"$root/corpus/shard=0")))
   }
 
   /** Fold new vectors in as the next `shard=G` of both tables — EXACT
@@ -111,7 +74,7 @@ object BqIndex {
     * caller contract, and CAS commit as every other append. */
   def append(delta: DataFrame, path: String, tag: String = ""): Unit = {
     val spark = delta.sparkSession
-    val meta = requireMeta(spark, path)
+    val meta = layout.requireMeta(spark, path)
     if (tag.nonEmpty && tag == meta.tag) return // retry of an applied append
     val (sigs, unit) = encodeDelta(delta)
     // both shard writes are orphans until the meta commit (LAST) — a
@@ -137,9 +100,8 @@ object BqIndex {
     require(k >= 1, s"k must be >= 1, got $k")
     val f = if (fetch <= 0) math.max(4 * k, 30) else fetch
     require(f >= k, s"fetch ($f) must be >= k ($k)")
-    val meta = requireMeta(spark, path)
-    val live = (t: String) => spark.read.parquet(s"$path/$t")
-      .filter(col("shard") >= meta.base && col("shard") <= meta.shards)
+    val meta = layout.requireMeta(spark, path)
+    val live = (t: String) => IndexLayout.live(spark, s"$path/$t", meta)
     val sigs = live("sigs").select(col("id"), col("sig"))
     Similarity.requireComparableIds(queries, sigs)
     val qs = queries.select(col("qid"), sigOf(col("qvec")).as("qsig"))
@@ -155,19 +117,5 @@ object BqIndex {
         Similarity.unitVec(col("qvec")).as("qvec"))
       .filter(col("qvec").isNotNull)
     Similarity.rerankShortlist(cu, shortlist, qu, k)
-  }
-
-  /** Merge all live shards into one ([[IvfIndex.compactTables]] over
-    * `sigs` + `corpus`) — results bit-identical by the same argument
-    * as appends being exact: a row's stored form is independent of
-    * which shard holds it. */
-  def compact(spark: SparkSession, path: String): Unit =
-    IvfIndex.compactTables(spark, path, Seq("sigs", "corpus"),
-      requireMeta(spark, path))
-
-  /** Committed live shard count, gated on this family's witnesses —
-    * the CLI status surface. */
-  def liveShards(spark: SparkSession, path: String): Int = {
-    val m = requireMeta(spark, path); m.shards - m.base + 1
   }
 }

@@ -1,109 +1,20 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.CatalystFunctions.{vecSub, vecUnit}
-
-/** IVF-PQ (IVFADC, Jégou et al. 2011 §V): the production billion-scale
-  * ANN index. Coarse cells prune the candidate set (only `nProbe` of
-  * ~sqrt(n) cells are scanned per query); RESIDUAL product-quantization
-  * codes score survivors in the compressed domain (m table lookups per
-  * candidate); an optional exact rerank rescores the shortlist against
-  * raw vectors.
-  *
-  * Memory story at 100 TB: the queryable index is (id, cell, codes) —
-  * 8-16 bytes of codes replacing a 256-byte raw vector (the raw corpus
-  * stays in cold storage, touched only by the broadcast-shortlist
-  * rerank pass). Residuals (x − centroid of x's cell) are tighter than
-  * raw vectors around zero, so the same codebook budget quantizes them
-  * with less error — the standard IVFADC refinement over plain PQ.
-  *
-  * All vectors are unit-normalized at build/query time (native
-  * `VecUnit`), so every score is a cosine: dot(q, x) = dot(q, c_cell)
-  * + dot(q, residual), with the first term exact from cell probing and
-  * the second approximated by ADC.
-  */
+/** A built or loaded IVF-PQ index ([[IvfPq]]). */
 final class IvfPqIndex private[ops] (
-    val ivf: IvfIndex,
+    ivf: IvfIndex,
     val cb: PqCodebook,
-    encoded: DataFrame, // (id, cell, codes) — the compact queryable index
-    corpusUnit: DataFrame, // raw unit vectors, only for the rerank pass
-    persisted: Boolean) {
+    encoded: DataFrame,
+    corpusUnit: DataFrame,
+    persisted: Boolean)
+    extends ResidualIvfIndex[PqCodebook](IvfPq, ivf, cb, encoded, corpusUnit,
+      persisted) {
 
-  def nCells: Int = ivf.nCells
-  def defaultProbe: Int = ivf.defaultProbe
-
-  /** Top-k per (qid, qvec) query row. `nProbe` <= 0 probes
-    * [[defaultProbe]] cells (half, the recall-first default); `fetch`
-    * controls the exact rerank: the DEFAULT (-1, "auto") fetches
-    * max(20·k, 100) ADC candidates and rescores them against raw
-    * vectors — library-default recall@5 lands ≥ 0.7 at sf0.1 instead
-    * of the sub-0.5 the rerank-off default produced (VERDICT r12 #3);
-    * `fetch = 0` switches the rerank OFF (no raw-corpus pass — the
-    * 100 TB cost lever: the rerank is one broadcast-shortlist map pass
-    * over the RAW corpus per query batch, which compressed-domain-only
-    * deployments skip deliberately); `fetch >= k` sets the budget
-    * explicitly. */
-  def query(queries: DataFrame, k: Int, nProbe: Int = 0,
-      fetch: Int = -1): DataFrame = {
-    val f = if (fetch < 0) math.max(20 * k, 100) else fetch
-    // fetch in (0, k) would silently truncate the result below the k
-    // the caller asked for (review r11)
-    require(f == 0 || f >= k,
-      s"fetch ($f) must be 0 (off), negative (auto), or >= k ($k)")
-    // comparable qid/id types or the self-exclusion filter nulls out
-    // and the probe join degrades silently (ADVICE r11; the one copy
-    // of the widening-integral rule lives in Similarity)
-    Similarity.requireComparableIds(queries, encoded)
-    val probes = if (nProbe > 0) nProbe else defaultProbe
-    // zero-norm guard (review r11, matching bruteForceKnn/IvfIndex):
-    // VecUnit passes a zero vector through, every ADC score is then
-    // exactly 0.0 and the query returns k arbitrary smallest-id rows —
-    // a zero-vector query gets NO neighbors instead
-    val q = queries.select(col("qid"),
-        vecUnit(col("qvec").cast("array<double>")).as("qvec"))
-      .filter(Similarity.dot(col("qvec"), col("qvec")) > 0)
-    // the m·ks-double LUT rides only the |q| row frame and re-attaches
-    // AFTER probing (review r11: carried through topCells it fanned out
-    // across all nCells rows of the probe crossJoin + window shuffle —
-    // nCells/nProbe× wasted shuffle payload)
-    val qlut = q.select(col("qid"),
-      graft.ops.Pq.lutCol(col("qvec"), cb).as("__lut"))
-    val qProbes = Similarity.topCells(ivf.centroids, q, "qid", "qvec",
-      probes, keepScore = true)
-    val take = if (f > 0) f else k
-    val scored = encoded
-      // probe side explicitly broadcast (review r12): it is |q|·nProbe
-      // tiny rows, but its crossJoin lineage defeats size estimation —
-      // left to chance, a sort-merge plan would shuffle the ENTIRE
-      // codes table by cell per query batch
-      .join(broadcast(qProbes.drop("qvec").join(broadcast(qlut), "qid")),
-        "cell")
-      .filter(col("id") =!= col("qid"))
-      .withColumn("score",
-        col("__score") + graft.ops.Pq.adcCol(col("codes"), col("__lut"), cb.ks))
-      .select(col("qid"), col("id"), col("score"))
-    val adcTop = Similarity.topKByKey(scored, "qid", "id", "score",
-      metricDesc = true, take)
-    if (f == 0)
-      adcTop.select(col("qid"), col("rank"), col("id"),
-        round(col("score"), 4).as("sim"))
-    else Similarity.rerankShortlist(corpusUnit,
-      adcTop.select(col("qid"), col("id")), q, k)
-  }
-
-  /** Release persisted state (later queries recompute lazily). */
-  def close(): Unit = if (persisted) { encoded.unpersist(blocking = false); () }
-
-  /** Persist the full index under `path` as parquet tables: centroids,
-    * the PQ codebook, the compact (id, cell, codes) queryable index,
-    * and the unit-normalized corpus for the rerank pass (at real scale
-    * this table IS the cold-storage corpus copy — the hot index is the
-    * codes table, 32× smaller). The `meta` marker is written LAST so a
-    * crashed save never looks complete; a RE-save deletes the previous
-    * marker before overwriting any table (review r9 — stale meta over
-    * partially-rewritten tables would read as a complete index).
+  /** Persist the full index under `path` (the [[IndexLayout.save]]
+    * protocol: meta marker LAST, the previous one dropped first).
     *
     * `rot` pins an index built over an OPQ-ROTATED corpus to its
     * rotation (pass [[graft.ops.Pq.rotationHash]] of the matrix;
@@ -112,192 +23,71 @@ final class IvfPqIndex private[ops] (
     * rotation claim, so retraining the OPQ model in place can never
     * silently mix rotations in one codes table (the codes would be
     * garbage with no error anywhere). */
-  def save(path: String, rot: String = "", tag: String = ""): Unit = {
-    val spark = ivf.centroids.sparkSession
-    import spark.implicits._
-    IvfIndex.invalidateMeta(spark, path)
-    IvfIndex.clearStale(spark, path,
-      Set("centroids", "codebook", "encoded", "corpus"))
-    // encoded + corpus are SHARDED (shard=G dirs) so [[IvfPq.append]]
-    // can grow them crash-safely; delete the whole dirs first —
-    // overwrite only clears shard=0, and stale sibling shards from a
-    // previous save's appends would survive under a re-committing meta
-    locally {
-      val conf = spark.sparkContext.hadoopConfiguration
-      Seq("encoded", "corpus").foreach { t =>
-        val p = new org.apache.hadoop.fs.Path(s"$path/$t")
-        p.getFileSystem(conf).delete(p, true)
-      }
-    }
-    writeTables(path)
-    IvfIndex.writeMeta(spark, s"$path/meta", ivf.nCells, rot = rot,
-      tag = tag, epoch = IvfIndex.newEpoch())
-  }
-
-  /** The four sibling table writes of a save, under `root` — shared by
-    * [[save]] and [[IvfPq.rebuild]]'s staging (the IvfSqIndex rule).
-    * Independent, so overlapped (guide §2.6). */
-  private[ops] def writeTables(root: String): Unit = {
-    val spark = ivf.centroids.sparkSession
-    import spark.implicits._
-    ParActions.run(
-      () => ivf.centroids.coalesce(1).write.mode("overwrite")
-        .parquet(s"$root/centroids"),
-      () => Seq((cb.m, cb.ks, cb.dsub, cb.centroids.toSeq))
-        .toDF("m", "ks", "dsub", "centroids")
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/codebook"),
-      () => encoded.write.mode("overwrite").parquet(s"$root/encoded/shard=0"),
-      () => corpusUnit.write.mode("overwrite")
-        .parquet(s"$root/corpus/shard=0"))
-  }
+  def save(path: String, rot: String = "", tag: String = ""): Unit =
+    saveAs(path, rot, tag)
 }
 
-object IvfPq {
+/** IVF-PQ (IVFADC, Jégou et al. 2011 §V): the production billion-scale
+  * ANN index — [[ResidualIvf]] with RESIDUAL product-quantization codes
+  * (m table lookups per candidate; 8-16 bytes of codes replace a
+  * 256-byte raw vector). The query's m·ks-double LUT rides only the
+  * |q| row frame and re-attaches AFTER probing (review r11: carried
+  * through topCells it fanned out across all nCells rows of the probe
+  * crossJoin + window shuffle). */
+object IvfPq extends ResidualIvf[PqCodebook, IvfPqIndex] {
 
-  /** Build the index: IVF coarse quantizer (sqrt(n) cells by default,
-    * deterministic seeding, Lloyd-refined), then a residual PQ codebook
-    * trained on (x − centroid) and codes for every row. Build cost is a
-    * handful of corpus passes; nothing ever shuffles by vector payload
-    * — the only wide exchange is the IVF assignment's (id-keyed) rows
-    * and the m·ks·dsub-cell codebook aggregations.
-    *
-    * `md5Seeds = true` makes BOTH seeding passes (coarse cells and PQ
-    * codebook) hex-md5-ordered, i.e. reproducible by a SQL oracle —
+  private[graft] def layout: IndexLayout = IndexLayout.IvfPq
+
+  private[ops] def encodeCol(rvec: Column, cb: PqCodebook): Column =
+    Pq.encodeCol(rvec, cb)
+
+  private[ops] def modelFrame(spark: SparkSession, cb: PqCodebook): DataFrame = {
+    import spark.implicits._
+    Seq((cb.m, cb.ks, cb.dsub, cb.centroids.toSeq))
+      .toDF("m", "ks", "dsub", "centroids")
+  }
+
+  private[ops] def modelFromRow(r: Row): PqCodebook =
+    PqCodebook(r.getAs[Int]("m"), r.getAs[Int]("ks"), r.getAs[Int]("dsub"),
+      r.getAs[Seq[Double]]("centroids").toArray)
+
+  override private[ops] def probeSide(qProbes: DataFrame, q: DataFrame,
+      cb: PqCodebook): DataFrame =
+    qProbes.drop("qvec").join(broadcast(
+      q.select(col("qid"), Pq.lutCol(col("qvec"), cb).as("__lut"))), "qid")
+
+  private[ops] def scoreCol(cb: PqCodebook): Column =
+    Pq.adcCol(col("codes"), col("__lut"), cb.ks)
+
+  private[ops] def index(ivf: IvfIndex, cb: PqCodebook, encoded: DataFrame,
+      corpusUnit: DataFrame, persist: Boolean): IvfPqIndex =
+    new IvfPqIndex(ivf, cb, encoded, corpusUnit, persist)
+
+  /** Build the index with a residual PQ codebook of `m` subspaces ×
+    * `ks` codes, `pqIters` Lloyd passes. `md5Seeds = true` makes BOTH
+    * seeding passes (coarse cells and PQ codebook) hex-md5-ordered —
     * with `refineIters = 0` and `pqIters = 0` the whole
     * cells→codes→ADC→rerank pipeline is then engine-exact (gate e06). */
   def build(corpus: DataFrame, nCells: Int = 0, m: Int = 8, ks: Int = 64,
       pqIters: Int = 2, refineIters: Int = 1,
-      persist: Boolean = true, md5Seeds: Boolean = false): IvfPqIndex = {
-    // zero vectors dropped at build (review r11): VecUnit passes them
-    // through, they score 0.0 against everything and can fill top-k
-    // slots the exact paths (bruteForceKnn/IvfIndex) exclude
-    val unit = corpus.select(col("id"),
-        vecUnit(col("vec").cast("array<double>")).as("vec"))
-      .filter(Similarity.dot(col("vec"), col("vec")) > 0)
-    buildFromUnit(unit, nCells, m, ks, pqIters, refineIters, persist,
-      md5Seeds)
-  }
+      persist: Boolean = true, md5Seeds: Boolean = false): IvfPqIndex =
+    buildWith(corpus, nCells, refineIters, persist, md5Seeds)(
+      Pq.train(_, "id", "rvec", m, ks, pqIters))
 
-  /** [[build]] minus the normalization prefix — the [[rebuild]] entry
-    * (the IvfSq.buildFromUnit rule: stored corpus vectors are already
-    * unit; re-normalizing would perturb them by an ulp). */
-  private[ops] def buildFromUnit(unit: DataFrame, nCells: Int, m: Int,
-      ks: Int, pqIters: Int, refineIters: Int, persist: Boolean,
-      md5Seeds: Boolean): IvfPqIndex = {
-    val ivf = IvfIndex.build(unit, nCells, refineIters, persist = false,
-      md5Seeds = md5Seeds)
-    // persist the residual frame (review r11): Pq.train runs three
-    // actions over it (dim head, seed collect, its own cache fill) and
-    // encodeCol a fourth — un-cached, each re-ran the raw scan +
-    // assignment shuffle + centroid join
-    val residuals = ivf.assigned
-      .join(broadcast(ivf.centroids), "cell")
-      .select(col("id"), col("cell"),
-        vecSub(col("vec"), col("cvec")).as("rvec"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val cb = Pq.train(residuals, "id", "rvec", m, ks, pqIters)
-      val encoded0 = residuals.select(col("id"), col("cell"),
-        Pq.encodeCol(col("rvec"), cb).as("codes"))
-      val encoded =
-        if (persist) {
-          val e = encoded0
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          e.count() // materialize through the residual cache
-          e
-        } else encoded0
-      new IvfPqIndex(ivf, cb, encoded, unit, persist)
-    } finally {
-      // persist=true: encoded is materialized, the cache served its
-      // purpose. persist=false (build→save): the save's encode pass
-      // re-derives residuals once from source — same cost as before
-      // this cache existed, which still saved train's 3 extra passes.
-      residuals.unpersist(blocking = false); ()
-    }
-  }
-
-  /** Reload a [[IvfPqIndex.save]]d index: query results are
-    * bit-identical to the freshly-built index (the spec asserts this) —
-    * centroids, codebook, and codes round-trip exactly; the embedded
-    * coarse index's per-row assignment is reconstructed lazily from the
-    * saved tables (only consulted if the coarse index is queried
-    * directly). */
-  def load(spark: org.apache.spark.sql.SparkSession, path: String,
-      persist: Boolean = true): IvfPqIndex = {
-    val (cells, shards, base, _) = IvfIndex.readMetaNamed(spark, path)
-    // direct driver-side artifact reads (MetaIo, r19): centroids and
-    // codebook are kilobyte tables read footer+page with zero Spark
-    // jobs — supersedes the r18 run2 overlap of two scan jobs
-    val centMat = IvfIndex.centroidsLocal(spark, path)
-    val cb = readCodebook(spark, path)
-    // committed LIVE shards only (the IvfIndex frontier + base rule)
-    val corpusUnit = spark.read.parquet(s"$path/corpus")
-      .filter(col("shard") >= base && col("shard") <= shards)
-      .select("id", "vec")
-    val encoded0 = spark.read.parquet(s"$path/encoded")
-      .filter(col("shard") >= base && col("shard") <= shards)
-      .select("id", "cell", "codes")
-    val encoded =
-      if (persist)
-        encoded0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else encoded0
-    val assigned = corpusUnit
-      .join(encoded0.select(col("id"), col("cell")), "id")
-      .withColumn("nrm", Similarity.norm(col("vec")))
-    new IvfPqIndex(new IvfIndex(centMat, assigned, cells, persisted = false),
-      cb, encoded, corpusUnit, persist)
-  }
-
-  /** Fold new vectors into a saved IVF-PQ index WITHOUT retraining —
-    * the [[IvfIndex.append]] contract extended to the compressed
-    * family (FAISS `add` on an "IVF,PQ" index): the delta
-    * unit-normalizes and drops zero vectors (the build rule), assigns
-    * to the FROZEN coarse centroids, encodes its residuals with the
-    * FROZEN codebook, and lands as the next `shard=G` of both the
-    * `encoded` (hot) and `corpus` (rerank) tables; the meta rewrite
-    * (LAST) commits the frontier. One delta-sized pass — the standing
-    * corpus's codes are never touched or re-read. Quantization error
-    * for the delta is whatever the frozen codebook gives it;
-    * re-training on drift is a REBUILD (the add-vs-train split). Same
-    * `tag` idempotence and unique-ids contract as the other appends. */
-  /** ONE committed-meta read + completeness check serving a whole
-    * operation (ADVICE r15: exists() re-read the meta for the
-    * layout-witness dir and every caller read it again — two to three
-    * driver-side Spark jobs per append/compact where one suffices; the
-    * codebook/base-shard witnesses are cheap FS checks). */
-  private def metaIfCompletePq(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[IvfIndex.IdxMeta] =
-    IvfIndex.metaIfComplete(spark, path).filter { m =>
-      Similarity.committedParquetExists(spark, s"$path/codebook") &&
-      // layout-epoch guard (r14: encoded/corpus went sharded) — an
-      // index whose meta already carried the shards column but whose
-      // tables predate the sharding reads as incomplete and rebuilds
-      // once. The guarded dir is the BASE shard: after a compaction
-      // shard=0 is gone by design; the merged shard is the witness.
-      Similarity.committedParquetExists(spark, s"$path/encoded/shard=${m.base}")
-    }
-
-  private def requireMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String): IvfIndex.IdxMeta = {
-    val m = metaIfCompletePq(spark, path)
-    require(m.isDefined,
-      s"ivfpq index at '$path' is missing or incomplete " +
-        "(no committed meta/codebook - saves write meta last)")
-    m.get
-  }
-
-  /** `rot` is the caller's rotation claim ([[graft.ops.Pq.appendOpq]]
-    * passes its loaded model's [[graft.ops.Pq.rotationHash]]; plain
-    * unrotated appends pass ""): an index whose meta carries a
-    * rotation pin REFUSES any append whose claim differs — including
-    * the empty claim of a plain append, which would mix unrotated
-    * vectors into a rotated codes table. An UNPINNED index appended
-    * with a rotation claim adopts the pin (legacy indexes saved before
-    * the pin existed close the hole after their first appendOpq). */
+  /** [[ResidualIvf.appendWith]] under the frozen codebook. `rot` is the
+    * caller's rotation claim ([[graft.ops.Pq.appendOpq]] passes its
+    * loaded model's [[graft.ops.Pq.rotationHash]]; plain unrotated
+    * appends pass ""): an index whose meta carries a rotation pin
+    * REFUSES any append whose claim differs — including the empty claim
+    * of a plain append, which would mix unrotated vectors into a
+    * rotated codes table. An UNPINNED index appended with a rotation
+    * claim adopts the pin (legacy indexes saved before the pin existed
+    * close the hole after their first appendOpq). */
   def append(delta: DataFrame, path: String, tag: String = "",
-      rot: String = ""): Unit = {
-    val spark = delta.sparkSession
-    val meta = requireMeta(spark, path)
+      rot: String = ""): Unit = appendWith(delta, path, tag, rot)
+
+  override protected def admit(path: String, meta: IvfIndex.IdxMeta,
+      rot: String): Unit =
     if (meta.rot.nonEmpty && rot != meta.rot)
       throw new IllegalArgumentException(
         s"ivfpq index at '$path' is pinned to OPQ rotation " +
@@ -307,167 +97,32 @@ object IvfPq {
           "mix rotations in one codes table. Rebuild the index under " +
           "the new model, or append through Pq.appendOpq with the " +
           "matching model")
-    if (tag.nonEmpty && tag == meta.tag) return // retry of an applied append
-    val shards = meta.shards
-    // direct driver-side artifact reads (MetaIo, r19 — zero jobs)
-    val centMat = IvfIndex.centroidsLocal(spark, path)
-    val cb = readCodebook(spark, path)
-    val unit = delta.select(col("id"),
-        vecUnit(col("vec").cast("array<double>")).as("vec"))
-      .filter(Similarity.dot(col("vec"), col("vec")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // both shard writes are orphans until the meta commit (LAST) —
-      // overlap them (guide §2.6; the persisted `unit` computes once)
-      ParActions.run(
-        () => unit.write.mode("overwrite")
-          .parquet(s"$path/corpus/shard=${shards + 1}"),
-        () => Similarity.assignCell(centMat, unit, "id", "vec")
-          .join(broadcast(centMat), "cell")
-          .select(col("id"), col("cell"),
-            Pq.encodeCol(vecSub(col("vec"), col("cvec")), cb).as("codes"))
-          .write.mode("overwrite")
-          .parquet(s"$path/encoded/shard=${shards + 1}"))
-      // base carries through (the IvfIndex.append rule); CAS commit
-      // aborts loudly if a concurrent writer moved the frontier
-      IvfIndex.commitMetaCas(spark, path, shards + 1, tag,
-        newBase = meta.base, expect = meta, what = "ivfpq append",
-        newRot = if (meta.rot.isEmpty && rot.nonEmpty) Some(rot) else None)
-    } finally { unit.unpersist(blocking = false); () }
-  }
-
-  /** Per-shard centroid-drift telemetry (the [[IvfIndex.driftStats]]
-    * contract and rebuild rule — drift_ratio > ~1.5 on an appended
-    * shard means the frozen coarse geometry no longer fits the
-    * incoming distribution; for PQ the CODEBOOK shares the same frozen
-    * fate, so coarse drift is the leading indicator for both). */
-  def driftStats(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    requireMeta(spark, path)
-    IvfIndex.corpusDriftStats(spark, path)
-  }
-
-  /** Per-shard recall@k of the PQ probe path vs exact brute force over
-    * the saved unit corpus (the [[IvfIndex.probeRecall]] contract —
-    * recall here also prices the FROZEN codebook's quantization error
-    * on drifted shards, which residual norms alone understate). */
-  def probeRecall(spark: org.apache.spark.sql.SparkSession, path: String,
-      k: Int = 5, perShard: Int = 20, nProbe: Int = 0,
-      fetch: Int = -1): DataFrame = {
-    val meta = requireMeta(spark, path)
-    val corpus = spark.read.parquet(s"$path/corpus")
-      .filter(col("shard") >= meta.base && col("shard") <= meta.shards)
-      .select(col("shard"), col("id"), col("vec"))
-    val idx = load(spark, path, persist = false)
-    try IvfIndex.recallByShard(spark, corpus,
-      q => idx.query(q, k, nProbe, fetch), k, perShard)
-    finally idx.close()
-  }
-
-  /** The saved PQ codebook, read directly on the driver
-    * ([[MetaIo.readHead]] — one small part file, zero Spark jobs). */
-  private def readCodebook(spark: org.apache.spark.sql.SparkSession,
-      path: String): PqCodebook = {
-    val cbRow = MetaIo.readHead(spark, s"$path/codebook")
-    PqCodebook(cbRow.getAs[Int]("m"), cbRow.getAs[Int]("ks"),
-      cbRow.getAs[Int]("dsub"),
-      cbRow.getAs[Seq[Double]]("centroids").toArray)
-  }
-
-  /** True when `path` holds a complete saved IVF-PQ index. The meta
-    * marker alone is ambiguous (IvfIndex.save writes the identical
-    * layout, review r11): a plain-IVF path would read as complete here
-    * and then crash load() on the missing codebook — so require the
-    * codebook table too. */
-  def exists(spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
-    metaIfCompletePq(spark, path).isDefined
 
   /** The index's OPQ rotation pin ("" when unpinned) — callers
     * composing the rotated QUERY path check their model against it
     * ([[graft.ops.Pq.checkRotation]]) before probing. */
-  def rotationPin(spark: org.apache.spark.sql.SparkSession,
-      path: String): String = requireMeta(spark, path).rot
+  def rotationPin(spark: SparkSession, path: String): String =
+    layout.requireMeta(spark, path).rot
 
-  /** Merge all live shards into one ([[IvfIndex.compactTables]] over
-    * this family's `corpus` + `encoded` tables) — query results are
-    * bit-identical (frozen centroids + codebook make a row's encoding
-    * independent of which shard holds it); read amplification drops
-    * from one dir per append to one. */
-  def compact(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit =
-    IvfIndex.compactTables(spark, path, Seq("corpus", "encoded"),
-      requireMeta(spark, path))
-
-  /** Retrain the index IN PLACE from its own stored corpus (the
-    * [[graft.ops.IvfSq.rebuild]] contract: fresh coarse centroids AND
-    * a fresh residual codebook fit the union of build + appended rows;
-    * tag and the OPQ rotation pin carry through — the corpus is stored
-    * ALREADY rotated, so the rotation is unchanged by retraining the
-    * quantizers under it; append tags keep streaming retries no-ops;
-    * in-place and epoch-destructive, crash = incomplete-and-named). */
-  /** Negative `nCells`/`m`/`ks` (the defaults) PRESERVE the stored
-    * geometry (meta cell count; the codebook's m and ks) — a rebuild
-    * must not silently change a production index's compression
-    * format, and an incompatible default m would refuse outright on
-    * dims it doesn't divide. Explicit values override. */
-  def rebuild(spark: org.apache.spark.sql.SparkSession, path: String,
-      nCells: Int = -1, m: Int = -1, ks: Int = -1, pqIters: Int = 2,
-      refineIters: Int = 1, md5Seeds: Boolean = false): Unit = {
-    val meta = requireMeta(spark, path)
-    val cbRow = MetaIo.readHead(spark, s"$path/codebook")
-    val cells = if (nCells < 0) meta.cells else nCells
-    val mEff = if (m < 0) cbRow.getAs[Int]("m") else m
-    val ksEff = if (ks < 0) cbRow.getAs[Int]("ks") else ks
-    // rename-based rebuild (r19, VERDICT r18 #3 — the IvfSq.rebuild
-    // protocol): retrain reads the LIVE dirs, stages the new layout
-    // beside them, CAS-guards, then promotes by rename — no scratch
-    // corpus copy
-    val stage = s"$path/${IvfIndex.RebuildStage}"
-    val sp = new org.apache.hadoop.fs.Path(stage)
-    val fs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(sp, true) // reclaim a crashed rebuild's staging
-    var promoting = false
-    try {
-      val live = spark.read.parquet(s"$path/corpus")
-        .filter(col("shard") >= meta.base && col("shard") <= meta.shards)
-        .select("id", "vec")
-      val rebuilt = buildFromUnit(live, cells, mEff,
-        ksEff, pqIters, refineIters, persist = false, md5Seeds = md5Seeds)
-      rebuilt.writeTables(stage)
-      // CAS re-read before the destructive promote (the IvfSq rule)
-      IvfIndex.casGuardMoved(spark, path, meta, "ivfpq rebuild")
-      promoting = true
-      IvfIndex.promoteStaged(spark, path,
-        Seq("centroids", "codebook", "encoded", "corpus"))
-      IvfIndex.writeMeta(spark, s"$path/meta", rebuilt.nCells,
-        rot = meta.rot, tag = meta.tag, epoch = IvfIndex.newEpoch())
-      fs.delete(sp, true)
-      ()
-    } finally {
-      if (!promoting) { fs.delete(sp, true); () }
+  /** [[ResidualIvf.rebuildWith]]: fresh coarse centroids AND a fresh
+    * residual codebook. Negative `nCells`/`m`/`ks` (the defaults)
+    * PRESERVE the stored geometry (meta cell count; the codebook's m
+    * and ks) — a rebuild must not silently change a production index's
+    * compression format, and an incompatible default m would refuse
+    * outright on dims it doesn't divide. The OPQ rotation pin carries
+    * through: the corpus is stored ALREADY rotated, so retraining the
+    * quantizers under it leaves the rotation unchanged. */
+  def rebuild(spark: SparkSession, path: String, nCells: Int = -1,
+      m: Int = -1, ks: Int = -1, pqIters: Int = 2, refineIters: Int = 1,
+      md5Seeds: Boolean = false): Unit =
+    rebuildWith(spark, path, nCells, refineIters, md5Seeds) { r =>
+      // read only when a default asks for it; the live codebook stands
+      // until the promote, and the meta has been checked by now
+      lazy val stored = readModel(spark, path)
+      Pq.train(r, "id", "rvec", if (m < 0) stored.m else m,
+        if (ks < 0) stored.ks else ks, pqIters)
     }
-  }
 
-  /** Committed live shard count, gated on THIS family's completeness
-    * witnesses (the CLI status surface: a plain-IVF layout or a
-    * crashed save must read as missing here, not healthy). */
-  def liveShards(spark: org.apache.spark.sql.SparkSession,
-      path: String): Int = {
-    val m = requireMeta(spark, path); m.shards - m.base + 1
-  }
-
-  /** The [[IvfIndex.maintain]] policy hook over this family's
-    * telemetry, merge, and (optional) recall probe. */
-  def maintain(spark: org.apache.spark.sql.SparkSession, path: String,
-      maxLiveShards: Int = 4, driftThreshold: Double = 1.5,
-      recallFloor: Double = 0.0, k: Int = 5): IvfIndex.Maintenance = {
-    val meta = requireMeta(spark, path)
-    // ONE committed-meta read serves the whole pass (r16 review F6)
-    IvfIndex.maintainImpl(spark, path, meta,
-      IvfIndex.corpusDriftStatsFor(spark, path, meta.shards, meta.base),
-      () => IvfIndex.compactTables(spark, path, Seq("corpus", "encoded"),
-        meta),
-      if (recallFloor > 0) Some(() => probeRecall(spark, path, k)) else None,
-      maxLiveShards, driftThreshold, recallFloor)
-  }
+  private[graft] def rebuildStored(spark: SparkSession, path: String): Unit =
+    rebuild(spark, path)
 }

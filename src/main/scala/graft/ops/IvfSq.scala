@@ -1,413 +1,82 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.CatalystFunctions.{vecSub, vecUnit}
+/** A built or loaded IVF-SQ index ([[IvfSq]]). */
+final class IvfSqIndex private[ops] (
+    ivf: IvfIndex,
+    val model: SqModel,
+    encoded: DataFrame,
+    corpusUnit: DataFrame,
+    persisted: Boolean)
+    extends ResidualIvfIndex[SqModel](IvfSq, ivf, model, encoded, corpusUnit,
+      persisted) {
 
-/** IVF + scalar quantization (the FAISS "IVF<x>,SQ8" index): coarse
-  * cells prune the candidate set exactly like [[IvfPq]], but survivors
-  * score against SQ8-encoded RESIDUALS — one byte per dimension
+  /** Persist under `path` (the [[IndexLayout.save]] protocol: meta
+    * marker last, stale marker dropped first — crash-safe). `tag` seeds
+    * the append-idempotence token. */
+  def save(path: String, tag: String = ""): Unit = saveAs(path, "", tag)
+}
+
+/** IVF + scalar quantization (the FAISS "IVF<x>,SQ8" index):
+  * [[ResidualIvf]] with SQ8-encoded RESIDUALS — one byte per dimension
   * instead of PQ's one byte per subspace. 4× memory (vs PQ's 32×) buys
   * near-exact ranking with no codebook training: the residual model is
   * a per-dimension min/max pass. The production middle ground when
   * IVF-PQ's quantization error costs too much recall and raw-vector
-  * IVF costs too much memory.
+  * IVF costs too much memory. There is no LUT: the raw qvec IS the
+  * scoring payload and rides the probe join directly.
   *
-  * All vectors unit-normalize at build/query (native `VecUnit`), so
-  * every score is a cosine split dot(q, x) = dot(q, c_cell) +
-  * dot(q, residual) — the first term exact from probing, the second
-  * from the fused decode+dot `SqDotExpr`. With `md5Seeds = true` and
-  * `refineIters = 0` the ENTIRE pipeline (cells → residuals → min/max
-  * → codes → decode → score → rerank) is sequential deterministic
-  * double math — gate e13 hash-matches a DuckDB oracle end to end,
-  * which no trained-PQ composition can (Lloyd iterations are
-  * engine-specific).
-  *
-  * Scale shape: identical to [[IvfPq]] — the queryable index is
-  * (id, cell, codes), the raw corpus is touched only by the
-  * broadcast-shortlist rerank, and the only wide exchanges are the
-  * assignment shuffle and the per-query top-k window.
-  */
-final class IvfSqIndex private[ops] (
-    val ivf: IvfIndex,
-    val model: SqModel,
-    encoded: DataFrame, // (id, cell, codes) — the compact queryable index
-    corpusUnit: DataFrame, // raw unit vectors, only for the rerank pass
-    persisted: Boolean) {
+  * With `md5Seeds = true` and `refineIters = 0` the ENTIRE pipeline
+  * (cells → residuals → min/max → codes → decode → score → rerank) is
+  * sequential deterministic double math — gate e13 hash-matches a
+  * DuckDB oracle end to end, which no trained-PQ composition can (Lloyd
+  * iterations are engine-specific). Appends clamp values outside the
+  * frozen trained range (the Sq encode contract). */
+object IvfSq extends ResidualIvf[SqModel, IvfSqIndex] {
 
-  def nCells: Int = ivf.nCells
-  def defaultProbe: Int = ivf.defaultProbe
+  private[graft] def layout: IndexLayout = IndexLayout.IvfSq
 
-  /** Top-k per (qid, qvec) row; `nProbe` <= 0 probes [[defaultProbe]]
-    * (half the cells), `fetch` follows the [[IvfPqIndex.query]]
-    * contract: default -1 = auto rerank at max(20·k, 100), 0 = rerank
-    * off (no raw-corpus pass), >= k = explicit budget. */
-  def query(queries: DataFrame, k: Int, nProbe: Int = 0,
-      fetch: Int = -1): DataFrame = {
-    val f = if (fetch < 0) math.max(20 * k, 100) else fetch
-    require(f == 0 || f >= k,
-      s"fetch ($f) must be 0 (off), negative (auto), or >= k ($k)")
-    Similarity.requireComparableIds(queries, encoded)
-    val probes = if (nProbe > 0) nProbe else defaultProbe
-    // zero-norm guard (the IvfPq rule): a zero-vector query gets NO
-    // neighbors instead of k arbitrary rows at score 0.0
-    val q = queries.select(col("qid"),
-        vecUnit(col("qvec").cast("array<double>")).as("qvec"))
-      .filter(Similarity.dot(col("qvec"), col("qvec")) > 0)
-    // unlike IvfPq there is no LUT: the raw 64-double qvec IS the
-    // scoring payload and rides the probe join directly (8× smaller
-    // than the m·ks LUT it replaces)
-    val qProbes = Similarity.topCells(ivf.centroids, q, "qid", "qvec",
-      probes, keepScore = true)
-    val take = if (f > 0) f else k
-    val scored = encoded
-      // probe side explicitly broadcast (review r12, the IvfPq rule):
-      // |q|·nProbe tiny rows whose crossJoin lineage defeats size
-      // estimation — left unhinted, a sort-merge plan would shuffle
-      // the ENTIRE codes table by cell per query batch
-      .join(broadcast(qProbes), "cell")
-      .filter(col("id") =!= col("qid"))
-      .withColumn("score",
-        col("__score") + Sq.dotCol(col("codes"), col("qvec"), model))
-      .select(col("qid"), col("id"), col("score"))
-    val adcTop = Similarity.topKByKey(scored, "qid", "id", "score",
-      metricDesc = true, take)
-    if (f == 0)
-      adcTop.select(col("qid"), col("rank"), col("id"),
-        round(col("score"), 4).as("sim"))
-    else Similarity.rerankShortlist(corpusUnit,
-      adcTop.select(col("qid"), col("id")), q, k)
-  }
+  private[ops] def encodeCol(rvec: Column, model: SqModel): Column =
+    Sq.encodeCol(rvec, model)
 
-  /** Release persisted state (later queries recompute lazily). */
-  def close(): Unit = if (persisted) { encoded.unpersist(blocking = false); () }
-
-  /** Persist under `path` as parquet tables (the [[IvfPqIndex.save]]
-    * layout with an `sqmodel` table in place of the PQ codebook); meta
-    * marker last, stale marker deleted first — crash-safe. `tag`
-    * seeds the append-idempotence token ([[IvfSq.rebuild]] passes the
-    * pre-rebuild tag through so a streaming retry of the last applied
-    * batch still no-ops on the rebuilt index). */
-  def save(path: String, tag: String = ""): Unit = {
-    val spark = ivf.centroids.sparkSession
+  private[ops] def modelFrame(spark: SparkSession, model: SqModel): DataFrame = {
     import spark.implicits._
-    IvfIndex.invalidateMeta(spark, path)
-    IvfIndex.clearStale(spark, path,
-      Set("centroids", "sqmodel", "encoded", "corpus"))
-    // encoded + corpus are SHARDED for [[IvfSq.append]] (the IvfPq
-    // rule); delete the dirs first — stale sibling shards from a
-    // previous save's appends must not survive a re-committing meta
-    locally {
-      val conf = spark.sparkContext.hadoopConfiguration
-      Seq("encoded", "corpus").foreach { t =>
-        val p = new org.apache.hadoop.fs.Path(s"$path/$t")
-        p.getFileSystem(conf).delete(p, true)
-      }
-    }
-    writeTables(path)
-    IvfIndex.writeMeta(spark, s"$path/meta", ivf.nCells, tag = tag,
-      epoch = IvfIndex.newEpoch())
+    Seq((model.vmin.toSeq, model.vmax.toSeq)).toDF("vmin", "vmax")
   }
 
-  /** The four sibling table writes of a save, under `root` — shared by
-    * [[save]] (root = the index path) and [[IvfSq.rebuild]]'s staging
-    * (root = the hidden [[IvfIndex.RebuildStage]] dir). Independent, so
-    * overlapped (guide §2.6; the caller's meta commit still lands
-    * strictly after all four). */
-  private[ops] def writeTables(root: String): Unit = {
-    val spark = ivf.centroids.sparkSession
-    import spark.implicits._
-    ParActions.run(
-      () => ivf.centroids.coalesce(1).write.mode("overwrite")
-        .parquet(s"$root/centroids"),
-      () => Seq((model.vmin.toSeq, model.vmax.toSeq)).toDF("vmin", "vmax")
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/sqmodel"),
-      () => encoded.write.mode("overwrite").parquet(s"$root/encoded/shard=0"),
-      () => corpusUnit.write.mode("overwrite")
-        .parquet(s"$root/corpus/shard=0"))
-  }
-}
+  private[ops] def modelFromRow(r: Row): SqModel =
+    SqModel(r.getSeq[Double](r.fieldIndex("vmin")).toArray,
+      r.getSeq[Double](r.fieldIndex("vmax")).toArray)
 
-object IvfSq {
+  private[ops] def scoreCol(model: SqModel): Column =
+    Sq.dotCol(col("codes"), col("qvec"), model)
+
+  private[ops] def index(ivf: IvfIndex, model: SqModel, encoded: DataFrame,
+      corpusUnit: DataFrame, persist: Boolean): IvfSqIndex =
+    new IvfSqIndex(ivf, model, encoded, corpusUnit, persist)
 
   /** Build: IVF coarse quantizer, then per-dimension min/max of the
-    * residuals (x − centroid) and one byte code per dimension for
-    * every row. The residual frame persists across its three readers
-    * (dim head + min/max aggregation + encode — the IvfPq double-
-    * reference rule). `md5Seeds = true` + `refineIters = 0` makes the
-    * whole build SQL-reproducible (gate e13). */
+    * residuals and one byte code per dimension for every row.
+    * `md5Seeds = true` + `refineIters = 0` makes the whole build
+    * SQL-reproducible (gate e13). */
   def build(corpus: DataFrame, nCells: Int = 0, refineIters: Int = 1,
-      persist: Boolean = true, md5Seeds: Boolean = false): IvfSqIndex = {
-    // zero vectors dropped at build (the IvfPq rule): they score 0.0
-    // against everything and would fill top-k slots exact paths exclude
-    val unit = corpus.select(col("id"),
-        vecUnit(col("vec").cast("array<double>")).as("vec"))
-      .filter(Similarity.dot(col("vec"), col("vec")) > 0)
-    buildFromUnit(unit, nCells, refineIters, persist, md5Seeds)
-  }
+      persist: Boolean = true, md5Seeds: Boolean = false): IvfSqIndex =
+    buildWith(corpus, nCells, refineIters, persist, md5Seeds)(
+      Sq.train(_, "rvec"))
 
-  /** [[build]] minus the normalization prefix — the [[rebuild]] entry:
-    * a rebuild retrains from the index's OWN stored corpus, whose
-    * vectors are already unit (normalized once, at original
-    * build/append time); re-normalizing would perturb them by an ulp
-    * (1/sqrt(ss) with ss ≈ but not exactly 1.0) and break the
-    * bit-equality with a from-scratch build over the same corpus that
-    * gate e19 pins. */
-  private[ops] def buildFromUnit(unit: DataFrame, nCells: Int,
-      refineIters: Int, persist: Boolean, md5Seeds: Boolean): IvfSqIndex = {
-    val ivf = IvfIndex.build(unit, nCells, refineIters, persist = false,
-      md5Seeds = md5Seeds)
-    val residuals = ivf.assigned
-      .join(broadcast(ivf.centroids), "cell")
-      .select(col("id"), col("cell"),
-        vecSub(col("vec"), col("cvec")).as("rvec"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val model = Sq.train(residuals, "rvec")
-      val encoded0 = residuals.select(col("id"), col("cell"),
-        Sq.encodeCol(col("rvec"), model).as("codes"))
-      val encoded =
-        if (persist) {
-          val e = encoded0
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          e.count() // materialize through the residual cache
-          e
-        } else encoded0
-      new IvfSqIndex(ivf, model, encoded, unit, persist)
-    } finally {
-      residuals.unpersist(blocking = false); ()
-    }
-  }
+  /** [[ResidualIvf.appendWith]] under the frozen min/max model. */
+  def append(delta: DataFrame, path: String, tag: String = ""): Unit =
+    appendWith(delta, path, tag, rot = "")
 
-  /** Reload a [[IvfSqIndex.save]]d index — query results bit-identical
-    * to the freshly built one (spec-asserted, the IvfPq contract). */
-  def load(spark: org.apache.spark.sql.SparkSession, path: String,
-      persist: Boolean = true): IvfSqIndex = {
-    val (cells, shards, base, _) = IvfIndex.readMetaNamed(spark, path)
-    // direct driver-side artifact reads (MetaIo, r19): centroids and
-    // the SQ model are kilobyte tables a footer+page read serves with
-    // zero Spark jobs — the r18 run2 overlap of two scan jobs is
-    // superseded by not scheduling jobs at all
-    val centMat = IvfIndex.centroidsLocal(spark, path)
-    val model = IvfSq.readSqModel(spark, path)
-    // committed LIVE shards only (the IvfIndex frontier + base rule)
-    val corpusUnit = spark.read.parquet(s"$path/corpus")
-      .filter(col("shard") >= base && col("shard") <= shards)
-      .select("id", "vec")
-    val encoded0 = spark.read.parquet(s"$path/encoded")
-      .filter(col("shard") >= base && col("shard") <= shards)
-      .select("id", "cell", "codes")
-    val encoded =
-      if (persist)
-        encoded0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else encoded0
-    val assigned = corpusUnit
-      .join(encoded0.select(col("id"), col("cell")), "id")
-      .withColumn("nrm", Similarity.norm(col("vec")))
-    new IvfSqIndex(new IvfIndex(centMat, assigned, cells, persisted = false),
-      model, encoded, corpusUnit, persist)
-  }
+  /** [[ResidualIvf.rebuildWith]]: fresh centroids and a fresh min/max
+    * model. */
+  def rebuild(spark: SparkSession, path: String, nCells: Int = -1,
+      refineIters: Int = 1, md5Seeds: Boolean = false): Unit =
+    rebuildWith(spark, path, nCells, refineIters, md5Seeds)(
+      Sq.train(_, "rvec"))
 
-  /** Fold new vectors into a saved IVF-SQ index WITHOUT retraining —
-    * the [[IvfPq.append]] contract with the SQ quantizer: unit-
-    * normalize + drop zero vectors (the build rule), assign to the
-    * FROZEN centroids, byte-encode residuals with the FROZEN min/max
-    * model (values outside the trained range clamp — the Sq encode
-    * contract; retrain-on-drift is a rebuild), land as the next
-    * `shard=G` of encoded + corpus, meta rewrite LAST. Same `tag`
-    * idempotence and unique-ids contract as the other appends. */
-  def append(delta: DataFrame, path: String, tag: String = ""): Unit = {
-    val spark = delta.sparkSession
-    val meta = requireMeta(spark, path)
-    if (tag.nonEmpty && tag == meta.tag) return // retry of an applied append
-    val shards = meta.shards
-    // direct driver-side artifact reads (MetaIo, r19 — zero jobs)
-    val centMat = IvfIndex.centroidsLocal(spark, path)
-    val model = readSqModel(spark, path)
-    val unit = delta.select(col("id"),
-        vecUnit(col("vec").cast("array<double>")).as("vec"))
-      .filter(Similarity.dot(col("vec"), col("vec")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // both shard writes are orphans until the meta commit below —
-      // overlap them (guide §2.6; the persisted `unit` is computed
-      // once, later-arriving partitions read the cached blocks)
-      ParActions.run(
-        () => unit.write.mode("overwrite")
-          .parquet(s"$path/corpus/shard=${shards + 1}"),
-        () => Similarity.assignCell(centMat, unit, "id", "vec")
-          .join(broadcast(centMat), "cell")
-          .select(col("id"), col("cell"),
-            Sq.encodeCol(vecSub(col("vec"), col("cvec")), model).as("codes"))
-          .write.mode("overwrite")
-          .parquet(s"$path/encoded/shard=${shards + 1}"))
-      // base carries through (the IvfIndex.append rule); CAS commit
-      // aborts loudly if a concurrent writer moved the frontier
-      IvfIndex.commitMetaCas(spark, path, shards + 1, tag,
-        newBase = meta.base, expect = meta, what = "ivfsq append")
-    } finally { unit.unpersist(blocking = false); () }
-  }
-
-  /** Per-shard centroid-drift telemetry (the [[IvfIndex.driftStats]]
-    * contract and rebuild rule — drift_ratio > ~1.5 on an appended
-    * shard means the frozen coarse geometry no longer fits; for SQ the
-    * per-dimension min/max model is additionally CLAMPED on
-    * out-of-range residuals, so drift here decays ranking quality
-    * faster than plain IVF). */
-  def driftStats(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    requireMeta(spark, path)
-    IvfIndex.corpusDriftStats(spark, path)
-  }
-
-  /** Per-shard recall@k of the SQ probe path vs exact brute force over
-    * the saved unit corpus (the [[IvfIndex.probeRecall]] contract —
-    * recall here also prices the frozen min/max model's CLAMP on
-    * drifted shards' out-of-range residuals). */
-  def probeRecall(spark: org.apache.spark.sql.SparkSession, path: String,
-      k: Int = 5, perShard: Int = 20, nProbe: Int = 0,
-      fetch: Int = -1): DataFrame = {
-    val meta = requireMeta(spark, path)
-    val corpus = spark.read.parquet(s"$path/corpus")
-      .filter(col("shard") >= meta.base && col("shard") <= meta.shards)
-      .select(col("shard"), col("id"), col("vec"))
-    val idx = load(spark, path, persist = false)
-    try IvfIndex.recallByShard(spark, corpus,
-      q => idx.query(q, k, nProbe, fetch), k, perShard)
-    finally idx.close()
-  }
-
-  /** The saved SQ min/max model, read directly on the driver
-    * ([[MetaIo.readRows]] — one small part file, zero Spark jobs). */
-  private def readSqModel(spark: org.apache.spark.sql.SparkSession,
-      path: String): SqModel = {
-    val mRow = MetaIo.readHead(spark, s"$path/sqmodel")
-    SqModel(mRow.getSeq[Double](mRow.fieldIndex("vmin")).toArray,
-      mRow.getSeq[Double](mRow.fieldIndex("vmax")).toArray)
-  }
-
-  /** ONE committed-meta read + completeness check serving a whole
-    * operation (ADVICE r15 — the IvfPq.metaIfCompletePq rule): meta
-    * alone is ambiguous across the index family, so require the
-    * sqmodel table (FS check) and the base-shard layout witness
-    * (pre-sharding caches rebuild once; after compaction shard=0 is
-    * gone by design and the merged shard is the witness). */
-  private def metaIfCompleteSq(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[IvfIndex.IdxMeta] =
-    IvfIndex.metaIfComplete(spark, path).filter { m =>
-      Similarity.committedParquetExists(spark, s"$path/sqmodel") &&
-      Similarity.committedParquetExists(spark, s"$path/encoded/shard=${m.base}")
-    }
-
-  private def requireMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String): IvfIndex.IdxMeta = {
-    val m = metaIfCompleteSq(spark, path)
-    require(m.isDefined,
-      s"ivfsq index at '$path' is missing or incomplete " +
-        "(no committed meta/sqmodel - saves write meta last)")
-    m.get
-  }
-
-  /** True when `path` holds a complete saved IVF-SQ index. */
-  def exists(spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
-    metaIfCompleteSq(spark, path).isDefined
-
-  /** Merge all live shards into one ([[IvfIndex.compactTables]] over
-    * `corpus` + `encoded`) — query results bit-identical (frozen
-    * centroids + min/max model), read amplification back to one dir. */
-  def compact(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit =
-    IvfIndex.compactTables(spark, path, Seq("corpus", "encoded"),
-      requireMeta(spark, path))
-
-  /** Retrain the index IN PLACE from its own stored corpus — the
-    * response to a [[maintain]] rebuild flag, closing the lifecycle
-    * (build → append → drift flag → rebuild): fresh centroids and a
-    * fresh SQ min/max model fit the UNION of build + appended rows, so
-    * post-rebuild [[driftStats]] reads 1.0 again. No external corpus
-    * needed — the index's `corpus` table IS the training set (already
-    * unit-normalized; [[buildFromUnit]] skips re-normalization, so a
-    * rebuild is bit-identical to a from-scratch build over the same
-    * rows — gate e19 pins this against e13's full-corpus oracle). The
-    * append tag carries through, so a streaming retry of the last
-    * applied batch still no-ops. IN PLACE and epoch-destructive by
-    * design (save invalidates the standing meta first): a crash
-    * mid-rebuild leaves the index incomplete-and-named, never
-    * stale-geometry-over-new-rows; operators wanting a zero-downtime
-    * swap rebuild to a NEW path. Live rows stage through a durable
-    * scratch dir inside the index path (a lazily-read corpus would be
-    * deleted out from under the save's own rewrite). */
-  /** `nCells` < 0 (the default) PRESERVES the stored cell count — a
-    * rebuild through the CLI must not silently change a production
-    * index's geometry; 0 = re-auto-size to sqrt(n), > 0 explicit. */
-  def rebuild(spark: org.apache.spark.sql.SparkSession, path: String,
-      nCells: Int = -1, refineIters: Int = 1,
-      md5Seeds: Boolean = false): Unit = {
-    val meta = requireMeta(spark, path)
-    val cells = if (nCells < 0) meta.cells else nCells
-    // Rename-based rebuild (optimization r19, VERDICT r18 #3): the
-    // retrain reads the LIVE corpus dirs directly and stages the new
-    // layout BESIDE them — the old protocol's scratch copy (one full
-    // extra corpus write + read) existed only because save() deleted
-    // the dirs the retrain's lazy plans read, which the staging-then-
-    // promote order makes moot. Result identity is pinned by gate e19
-    // (rebuild ≡ from-scratch build, full-hash oracle) and SqSpec.
-    val stage = s"$path/${IvfIndex.RebuildStage}"
-    val sp = new org.apache.hadoop.fs.Path(stage)
-    val fs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(sp, true) // reclaim a crashed rebuild's staging
-    var promoting = false
-    try {
-      val live = spark.read.parquet(s"$path/corpus")
-        .filter(col("shard") >= meta.base && col("shard") <= meta.shards)
-        .select("id", "vec")
-      val rebuilt = buildFromUnit(live, cells,
-        refineIters, persist = false, md5Seeds = md5Seeds)
-      rebuilt.writeTables(stage) // live layout untouched while staging
-      // CAS re-read before the destructive promote (the commitMetaCas
-      // rule, applied to rebuild's own window): a writer that
-      // committed during the staging/retrain would otherwise be
-      // silently erased by the swap. Until the promote below, the
-      // standing index is COMMITTED and whole — an abort here costs
-      // nothing but the staged bytes.
-      IvfIndex.casGuardMoved(spark, path, meta, "ivfsq rebuild")
-      promoting = true
-      IvfIndex.promoteStaged(spark, path,
-        Seq("centroids", "sqmodel", "encoded", "corpus"))
-      IvfIndex.writeMeta(spark, s"$path/meta", rebuilt.nCells,
-        tag = meta.tag, epoch = IvfIndex.newEpoch())
-      fs.delete(sp, true) // empty staging root
-      ()
-    } finally {
-      // failed BEFORE the promote: the standing index is intact —
-      // discard the staging. A failure DURING the promote keeps the
-      // remaining staged tables on disk for recovery (the next
-      // rebuild's opening sweep reclaims them).
-      if (!promoting) { fs.delete(sp, true); () }
-    }
-  }
-
-  /** Committed live shard count, gated on THIS family's completeness
-    * witnesses (the CLI status surface: a plain-IVF layout or a
-    * crashed save must read as missing here, not healthy). */
-  def liveShards(spark: org.apache.spark.sql.SparkSession,
-      path: String): Int = {
-    val m = requireMeta(spark, path); m.shards - m.base + 1
-  }
-
-  /** The [[IvfIndex.maintain]] policy hook over this family's
-    * telemetry, merge, and (optional) recall probe. */
-  def maintain(spark: org.apache.spark.sql.SparkSession, path: String,
-      maxLiveShards: Int = 4, driftThreshold: Double = 1.5,
-      recallFloor: Double = 0.0, k: Int = 5): IvfIndex.Maintenance = {
-    val meta = requireMeta(spark, path)
-    // ONE committed-meta read serves the whole pass (r16 review F6)
-    IvfIndex.maintainImpl(spark, path, meta,
-      IvfIndex.corpusDriftStatsFor(spark, path, meta.shards, meta.base),
-      () => IvfIndex.compactTables(spark, path, Seq("corpus", "encoded"),
-        meta),
-      if (recallFloor > 0) Some(() => probeRecall(spark, path, k)) else None,
-      maxLiveShards, driftThreshold, recallFloor)
-  }
+  private[graft] def rebuildStored(spark: SparkSession, path: String): Unit =
+    rebuild(spark, path)
 }

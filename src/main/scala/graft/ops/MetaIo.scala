@@ -212,7 +212,13 @@ private[graft] object MetaIo {
     * rewrite, 4-5 of them per lifecycle gate). The layout readers see
     * is identical: a fresh dir, part file(s), `_SUCCESS` last — so
     * [[Similarity.committedParquetExists]] grades it exactly as a
-    * Spark write, and a crash before `_SUCCESS` grades uncommitted. */
+    * Spark write, and a crash before `_SUCCESS` grades uncommitted.
+    *
+    * The rows are written under the hidden [[tmpPartName]] and renamed
+    * to the part-file name only once the file is complete (ADVICE r19:
+    * with success markers disabled, part-file presence IS the commit
+    * signal, so a part file torn by a crash mid-write graded committed
+    * and [[MetaSwap]]'s heal would promote it over the standing meta). */
   def writeRows(spark: org.apache.spark.sql.SparkSession, dir: String,
       schema: StructType, rows: Seq[Row]): Unit = {
     val conf = hconf(spark)
@@ -221,8 +227,8 @@ private[graft] object MetaIo {
     fs.delete(p, true)
     fs.mkdirs(p)
     val mt = toParquetSchema(schema)
-    val file = new Path(p, "part-00000-metaio.snappy.parquet")
-    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(file, conf))
+    val tmp = new Path(p, tmpPartName)
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
       .withConf(conf)
       .withType(mt)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
@@ -247,8 +253,15 @@ private[graft] object MetaIo {
         w.write(g)
       }
     } finally w.close()
+    if (!fs.rename(tmp, new Path(p, "part-00000-metaio.snappy.parquet")))
+      throw new java.io.IOException(s"MetaIo: rename of '$tmp' failed")
     // job-commit marker LAST (the committedParquetExists contract)
     fs.create(new Path(p, "_SUCCESS"), true).close()
     ()
   }
+
+  /** The in-progress name of [[writeRows]]' part file: dot-prefixed, so
+    * Spark's file listing, [[partFiles]] and
+    * [[Similarity.committedParquetExists]] all ignore it. */
+  private[graft] val tmpPartName = ".part-00000-metaio.snappy.parquet.tmp"
 }

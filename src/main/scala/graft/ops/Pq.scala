@@ -320,7 +320,7 @@ object Pq {
     import spark.implicits._
     // re-save safety (review r9): drop the old marker before touching
     // the tables, or a crash mid-overwrite leaves stale meta standing
-    IvfIndex.invalidateMeta(spark, path)
+    MetaSwap.invalidate(spark, s"$path/meta")
     Seq((cb.m, cb.ks, cb.dsub, cb.centroids.toSeq))
       .toDF("m", "ks", "dsub", "centroids")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")

@@ -137,7 +137,10 @@ object Sampling {
     * hot group costs the same as a cold one. Results are unchanged
     * (d16/d48 hash gates); caller contract (as before, now load-
     * bearing for the join): ids are unique within a group — the
-    * deterministic rank already required it.
+    * deterministic rank already required it. The cap is therefore not
+    * hard for repeated ids: a group with several null-id rows can keep
+    * more than `cap` rows, because null ids match as ONE identity under
+    * the null-safe `<=>` join (three null-id rows at cap 1 all survive).
     * For corpora where even the keep-set join is unwelcome, the
     * hash-filter [[groupQuotaApprox]] stays the shuffle-free twin. */
   def groupQuota(df: DataFrame, idCol: String, groupCol: String,

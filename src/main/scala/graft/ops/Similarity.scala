@@ -606,35 +606,15 @@ final class IvfIndex private[ops] (
   def close(): Unit = if (persisted) { assigned.unpersist(blocking = false); () }
 
   /** Persist the index as parquet tables under `path`: the centroid
-    * table and the assigned corpus, plus a `meta` marker written LAST
-    * so a crashed save is never mistaken for a complete index
-    * ([[IvfIndex.exists]] checks the marker). A second session then
+    * table and the sharded assigned corpus, plus a `meta` marker
+    * written LAST ([[IndexLayout.save]]) so a crashed save is never
+    * mistaken for a complete index. A second session then
     * [[IvfIndex.load]]s instead of re-running seeding + Lloyd + the
     * assignment pass (VERDICT r3 missing #2: indexes lived only in JVM
-    * memory). Re-saving over an existing path deletes the OLD meta
-    * marker before touching the data tables (review r9): otherwise a
-    * crash mid-overwrite would leave stale meta standing over partial
-    * tables — exactly the state the meta-last protocol exists to make
-    * unrepresentable. */
-  def save(path: String, tag: String = ""): Unit = {
-    val spark = centroids.sparkSession
-    IvfIndex.invalidateMeta(spark, path)
-    IvfIndex.clearStale(spark, path, Set("centroids", "assigned"))
-    // the assigned table is SHARDED (shard=G dirs, the LSH-index
-    // protocol) so [[IvfIndex.append]] can grow it crash-safely;
-    // delete the whole dir first — overwrite mode only clears the
-    // shard=0 subdir, and stale sibling shards from a previous save's
-    // appends would otherwise survive under a meta that re-commits
-    // them
-    locally {
-      val p = new org.apache.hadoop.fs.Path(s"$path/assigned")
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      ()
-    }
-    writeTables(path)
-    IvfIndex.writeMeta(spark, s"$path/meta", nCells, tag = tag,
-      epoch = IvfIndex.newEpoch())
-  }
+    * memory). */
+  def save(path: String, tag: String = ""): Unit =
+    IndexLayout.Ivf.save(centroids.sparkSession, path, nCells, tag)(
+      writeTables)
 
   /** The two sibling table writes of a save, under `root` — shared by
     * [[save]] and [[IvfIndex.rebuild]]'s staging. Independent, so
@@ -695,7 +675,7 @@ private[graft] object MetaSwap {
   /** Finish or discard a pending swap (writer-side, before writing):
     * a committed `.next` promotes (delete main, rename next → main);
     * an uncommitted one — a crashed write — is deleted. */
-  private def heal(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def heal(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
     val (fs, next) = hfs(spark, nextDir(dir))
     if (fs.exists(next)) {
@@ -741,7 +721,7 @@ private[graft] object MetaSwap {
 
   /** Delete BOTH marker dirs — the rebuild-time invalidation (a
     * rebuild MUST read as incomplete while its tables are mid-rewrite;
-    * see IvfIndex.invalidateMeta). */
+    * see [[IndexLayout.save]]). */
   def invalidate(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
     val (fs, p) = hfs(spark, dir)
@@ -928,7 +908,9 @@ private[graft] object ParActions {
   }
 }
 
-object IvfIndex {
+object IvfIndex extends RetrainableIndex {
+
+  private[graft] def layout: IndexLayout = IndexLayout.Ivf
 
   /** Size a shard WRITE from the plan's size estimate instead of
     * letting it inherit the spread's defaultParallelism (guide §6:
@@ -1037,14 +1019,11 @@ object IvfIndex {
       else Some(metaFromRow(m))
     }
 
-  /** Name-based meta read for callers that already know the index is
-    * complete: (nCells, shards, base, tag). */
-  private[ops] def readMetaNamed(spark: org.apache.spark.sql.SparkSession,
-      path: String): (Int, Int, Int, String) = {
-    val m = metaFromRow(
+  /** Meta read for callers that already know the index is complete. */
+  private[ops] def readMeta(spark: org.apache.spark.sql.SparkSession,
+      path: String): IdxMeta =
+    metaFromRow(
       MetaIo.readHead(spark, MetaSwap.readDir(spark, s"$path/meta")))
-    (m.cells, m.shards, m.base, m.tag)
-  }
 
   /** Test seam for the optimistic-concurrency specs: runs after a
     * writer's data lands but BEFORE its [[commitMetaCas]] re-read, so
@@ -1079,14 +1058,7 @@ object IvfIndex {
   private[ops] def commitMetaCas(spark: org.apache.spark.sql.SparkSession,
       path: String, newShards: Int, newTag: String, newBase: Int,
       expect: IdxMeta, what: String, newRot: Option[String] = None): Unit = {
-    beforeCasCommit()
-    val cur = metaIfComplete(spark, path).getOrElse(
-      throw new java.util.ConcurrentModificationException(
-        s"$what at '$path': the committed meta vanished mid-operation " +
-          "(a concurrent rebuild invalidated the index); aborting - " +
-          "this writer's orphan shard dirs are invisible to readers"))
-    casCompare(what, path, expect.shards, expect.tag, expect.epoch,
-      cur.shards, cur.tag, cur.epoch)
+    casGuard(spark, path, expect, what)
     // the rotation pin survives every maintenance commit by default
     // (only the first pinning appendOpq on a legacy index passes a
     // value), and so does the layout epoch - only save/rebuild mint one
@@ -1168,9 +1140,7 @@ object IvfIndex {
     // commit below still runs strictly after every rename (guide §2.6)
     ParActions.run(tables.map { t => () => {
       val tmp = ShardDirs.compactTmp(s"$path/$t")
-      spark.read.parquet(s"$path/$t")
-        .filter(col("shard") >= base && col("shard") <= shards)
-        .drop("shard")
+      IndexLayout.live(spark, s"$path/$t", meta).drop("shard")
         .write.mode("overwrite").parquet(tmp)
       ShardDirs.renameIntoShard(spark, tmp, s"$path/$t/shard=${shards + 2}",
         "index compact", moved)
@@ -1185,138 +1155,48 @@ object IvfIndex {
     sweep(shards + 2)
   }
 
-  /** [[compactTables]] for a plain IVF index (the `assigned` table). */
-  def compact(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val meta = metaIfComplete(spark, path)
-    require(meta.isDefined,
-      s"ivf index at '$path' is missing or incomplete " +
-        "(no committed meta table - saves write it last)")
-    compactTables(spark, path, Seq("assigned"), meta.get)
-  }
-
   /** Retrain a plain IVF index IN PLACE from its own stored vectors
-    * (the IvfSq.rebuild contract: the `assigned` table carries the
-    * original vectors, so no external corpus is needed; fresh
-    * centroids fit the union of build + appended rows and
-    * [[driftStats]] reads 1.0 again; the append tag carries through so
-    * streaming retries keep no-opping; in-place, epoch-destructive,
-    * crash = incomplete-and-named; live rows stage through a durable
-    * scratch dir — a lazily-read assigned table would be deleted out
-    * from under the save's own rewrite). */
-  /** `nCells` < 0 (the default) preserves the stored cell count (the
-    * IvfSq.rebuild rule); 0 = re-auto-size, > 0 explicit. */
+    * (the [[IvfSq.rebuild]] contract: the `assigned` table carries the
+    * original vectors, so no external corpus is needed; fresh centroids
+    * fit the union of build + appended rows and [[driftStats]] reads
+    * 1.0 again; see [[IndexLayout.rebuild]] for the staging and crash
+    * windows). `nCells` < 0 (the default) preserves the stored cell
+    * count; 0 = re-auto-size, > 0 explicit. */
   def rebuild(spark: org.apache.spark.sql.SparkSession, path: String,
       nCells: Int = -1, refineIters: Int = 1,
       md5Seeds: Boolean = false): Unit = {
-    val meta = metaIfComplete(spark, path)
-    require(meta.isDefined,
-      s"ivf index at '$path' is missing or incomplete " +
-        "(no committed meta table - saves write it last)")
-    val m = meta.get
-    val cells = if (nCells < 0) m.cells else nCells
-    // rename-based rebuild (r19, VERDICT r18 #3 — see promoteStaged):
-    // retrain reads the LIVE assigned dirs, stages the new layout
-    // beside them, CAS-guards, then promotes by rename — no scratch
-    // corpus copy
-    val stage = s"$path/$RebuildStage"
-    val sp = new org.apache.hadoop.fs.Path(stage)
-    val fs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(sp, true) // reclaim a crashed rebuild's staging
-    var promoting = false
-    try {
-      val live = spark.read.parquet(s"$path/assigned")
-        .filter(col("shard") >= m.base && col("shard") <= m.shards)
+    val meta = layout.requireMeta(spark, path)
+    layout.rebuild(spark, path, meta) { root =>
+      val live = IndexLayout.live(spark, s"$path/assigned", meta)
         .select("id", "vec")
-      val rebuilt = build(live, cells, refineIters,
-        persist = false, md5Seeds = md5Seeds)
-      rebuilt.writeTables(stage)
-      // CAS re-read before the destructive promote (the IvfSq.rebuild
-      // rule): a writer that committed during the retrain must abort
-      // the rebuild, not be erased by it — and until the promote the
-      // standing index is committed and whole
-      casGuardMoved(spark, path, m, "ivf rebuild")
-      promoting = true
-      promoteStaged(spark, path, Seq("centroids", "assigned"))
-      writeMeta(spark, s"$path/meta", rebuilt.nCells, tag = m.tag,
-        epoch = newEpoch())
-      fs.delete(sp, true)
-      ()
-    } finally {
-      if (!promoting) { fs.delete(sp, true); () }
+      val rebuilt = build(live, if (nCells < 0) meta.cells else nCells,
+        refineIters, persist = false, md5Seeds = md5Seeds)
+      rebuilt.writeTables(root)
+      rebuilt.nCells
     }
   }
+
+  private[graft] def rebuildStored(spark: org.apache.spark.sql.SparkSession,
+      path: String): Unit = rebuild(spark, path)
 
   /** Name of the hidden staging root a rebuild writes its NEW tables
     * under — dot-prefixed, so readers and partition discovery never
-    * see it; inside the index path, so the rename below is one-FS. */
+    * see it; inside the index path, so the promoting rename is one-FS. */
   private[graft] val RebuildStage = ".rebuild-new"
 
-  /** Promote a rebuild's completed staging root into the live layout
-    * (optimization r19, VERDICT r18 #3 — rename-based rebuild): the
-    * old protocol staged the live CORPUS to a scratch dir (a full
-    * extra corpus write + read) because save() deletes the very dirs
-    * the retrain's lazy plans read. Now the retrain reads the LIVE
-    * dirs directly and writes the new layout BESIDE them under
-    * [[RebuildStage]]; this promotion then invalidates the meta,
-    * clears the other layouts' stale tables, and swaps each staged
-    * table into place by rename — metadata-only operations.
-    *
-    * Crash windows, stated against the old protocol's:
-    *   - crash while STAGING (before this runs): the standing index is
-    *     fully intact and committed — strictly better than the old
-    *     protocol, whose save had already invalidated the meta before
-    *     its first table write; the orphan staging root is reclaimed
-    *     by the next rebuild's opening sweep (or the finally).
-    *   - crash anywhere in here: incomplete-and-named (the meta is
-    *     invalidated FIRST), with every staged byte still on disk
-    *     under the index path — the same recovery class as the old
-    *     protocol's crash-mid-save (scratch dir held the corpus).
-    * The CAS guard runs BEFORE this (caller contract), so a writer
-    * that committed during the retrain aborts the rebuild while the
-    * standing index is still whole. */
-  private[ops] def promoteStaged(spark: org.apache.spark.sql.SparkSession,
-      path: String, tables: Seq[String]): Unit = {
-    invalidateMeta(spark, path)
-    clearStale(spark, path, tables.toSet)
-    val conf = spark.sparkContext.hadoopConfiguration
-    tables.foreach { t =>
-      val dst = new org.apache.hadoop.fs.Path(s"$path/$t")
-      val fs = dst.getFileSystem(conf)
-      fs.delete(dst, true)
-      if (!fs.rename(
-          new org.apache.hadoop.fs.Path(s"$path/$RebuildStage/$t"), dst))
-        throw new java.io.IOException(
-          s"rebuild promote: rename of staged '$t' into '$path' failed " +
-            "- the index reads as incomplete (meta invalidated); the " +
-            "staged tables are intact under " +
-            s"'$path/$RebuildStage' for inspection")
-    }
-  }
-
-  /** Loud abort when the committed meta moved past `expect` — the
-    * commitMetaCas comparison exposed for operations (rebuild) whose
-    * commit is a whole save, not one meta swap. */
-  private[ops] def casGuardMoved(spark: org.apache.spark.sql.SparkSession,
+  /** Loud abort when the committed meta moved past `expect` — the CAS
+    * re-read of [[commitMetaCas]], also run by a rebuild before its
+    * promote (its commit is a whole layout swap, not one meta write). */
+  private[ops] def casGuard(spark: org.apache.spark.sql.SparkSession,
       path: String, expect: IdxMeta, what: String): Unit = {
     beforeCasCommit()
     val cur = metaIfComplete(spark, path).getOrElse(
       throw new java.util.ConcurrentModificationException(
         s"$what at '$path': the committed meta vanished mid-operation " +
-          "(a concurrent rebuild invalidated the index); aborting"))
+          "(a concurrent rebuild invalidated the index); aborting - " +
+          "nothing this operation wrote is visible to readers"))
     casCompare(what, path, expect.shards, expect.tag, expect.epoch,
       cur.shards, cur.tag, cur.epoch)
-  }
-
-  /** Committed live shard count (frontier − base + 1) — the CLI
-    * status surface and the streaming loops' compaction trigger. */
-  def liveShards(spark: org.apache.spark.sql.SparkSession,
-      path: String): Int = {
-    val m = metaIfComplete(spark, path)
-    require(m.isDefined,
-      s"ivf index at '$path' is missing or incomplete " +
-        "(no committed meta table - saves write it last)")
-    m.get.shards - m.get.base + 1
   }
 
   /** One [[maintain]] pass's verdict. `liveShards` is the count AFTER
@@ -1329,143 +1209,21 @@ object IvfIndex {
   final case class Maintenance(liveShards: Int, maxDriftRatio: Double,
       minProbeRecall: Double, compacted: Boolean, rebuildFlagged: Boolean)
 
-  /** The maintenance policy hook (VERDICT r15 #7 — until now the
-    * rebuild rule lived in documentation): one call per
-    * ingest-maintenance cycle reads the drift telemetry and EITHER
-    * flags a rebuild or compacts, so operators act on the telemetry
-    * instead of eyeballing it.
-    *
-    *  - **rebuild flag** (act on it with [[rebuild]], which retrains
-    *    from the index's own stored vectors) when any non-base
-    *    shard's drift_ratio exceeds
-    *    `driftThreshold` (default 1.5, the documented rule: residuals
-    *    50% above the build population's mean put delta rows
-    *    materially farther from every centroid than the geometry was
-    *    trained on — probed-cell recall starts paying). Optionally
-    *    (`recallFloor` > 0) also when any shard's [[probeRecall]]@`k`
-    *    falls below the floor — the QUALITY confirmation, off by
-    *    default because it prices a brute-force pass over the corpus.
-    *    A flagged pass does NOT compact: a rebuild supersedes the
-    *    merge, and merging first would fold the drifted rows into the
-    *    base population — the ratio self-normalizes to 1.0 and the
-    *    evidence is destroyed.
-    *  - **compact** when live shards exceed `maxLiveShards` (read
-    *    amplification is linear in append count until the merge) and
-    *    nothing was flagged.
-    *
-    * Drift is always measured BEFORE any merge, for the same
-    * evidence-destruction reason. Returns what it did and saw. */
-  def maintain(spark: org.apache.spark.sql.SparkSession, path: String,
-      maxLiveShards: Int = 4, driftThreshold: Double = 1.5,
-      recallFloor: Double = 0.0, k: Int = 5): Maintenance = {
-    val meta = metaIfComplete(spark, path)
-    require(meta.isDefined,
-      s"ivf index at '$path' is missing or incomplete " +
-        "(no committed meta table - saves write it last)")
-    // ONE committed-meta read serves the whole pass (r16 review F6):
-    // the planning read above also feeds the drift scan's shard range
-    maintainImpl(spark, path, meta.get,
-      driftStatsFor(spark, path, meta.get.shards, meta.get.base),
-      () => compactTables(spark, path, Seq("assigned"), meta.get),
-      if (recallFloor > 0) Some(() => probeRecall(spark, path, k)) else None,
-      maxLiveShards, driftThreshold, recallFloor)
-  }
-
-  /** The decision half of [[maintain]], shared with the PQ/SQ
-    * families: `drift` is the family's telemetry frame, `doCompact`
-    * its merge, `recall` the optional quality probe. */
-  private[ops] def maintainImpl(spark: org.apache.spark.sql.SparkSession,
-      path: String, meta: IdxMeta, drift: DataFrame,
-      doCompact: () => Unit, recall: Option[() => DataFrame],
-      maxLiveShards: Int, driftThreshold: Double,
-      recallFloor: Double): Maintenance = {
-    val live = meta.shards - meta.base + 1
-    // bounded collect: one row per live shard
-    val ratios = drift.collect().map(r =>
-      r.getInt(r.fieldIndex("shard")) ->
-        r.getDouble(r.fieldIndex("drift_ratio"))).toMap
-    val maxDrift = (ratios - meta.base).values.foldLeft(1.0)(math.max)
-    val minRecall = recall.map(f => f().collect()
-      .map(r => r.getDouble(r.fieldIndex("recall"))).foldLeft(1.0)(math.min))
-      .getOrElse(-1.0)
-    val flagged = maxDrift > driftThreshold ||
-      (recallFloor > 0 && minRecall >= 0 && minRecall < recallFloor)
-    val doMerge = !flagged && live > maxLiveShards
-    if (doMerge) doCompact()
-    // post-pass live count (ADVICE r16): a compact merges every live
-    // shard into exactly one by contract (base == shards after it)
-    Maintenance(if (doMerge) 1 else live, maxDrift, minRecall,
-      compacted = doMerge, rebuildFlagged = flagged)
-  }
-
-  /** Drop `path`'s meta marker so the index reads as incomplete while
-    * its data tables are being (re)written — the first step of every
-    * save (review r9: overwrite-in-place kept the previous save's
-    * marker standing through the data rewrite). */
-  private[ops] def invalidateMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit =
-    MetaSwap.invalidate(spark, s"$path/meta")
-
-  /** Every table name any index layout under one path may write —
-    * plain IVF (centroids/assigned), IVF-PQ (codebook/encoded/corpus),
-    * IVF-SQ (sqmodel/encoded/corpus), BQ (sigs/corpus). */
-  private[ops] val layoutTables = Seq("centroids", "assigned",
-    "codebook", "encoded", "corpus", "sqmodel", "sigs")
-
-  /** Delete the sibling layout tables a save will NOT rewrite (review
-    * r12): the index family shares one path layout, and a path
-    * re-saved as a DIFFERENT index type left the other type's tables
-    * standing — IvfPq.exists (meta + codebook) then graded a plain-IVF
-    * re-save as a complete IVF-PQ index, and load() silently combined
-    * the NEW centroids with the STALE codes. Runs after
-    * invalidateMeta (no marker stands while the layout mutates),
-    * before any write. */
-  private[ops] def clearStale(spark: org.apache.spark.sql.SparkSession,
-      path: String, writes: Set[String]): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    layoutTables.filterNot(writes).foreach { t =>
-      val p = new org.apache.hadoop.fs.Path(s"$path/$t")
-      p.getFileSystem(conf).delete(p, true)
-    }
-  }
-
-  /** True when `path` holds a COMPLETE saved index (meta marker is
-    * written last by save). Completeness = `_SUCCESS` in the meta dir
-    * when markers are on; with markers disabled
-    * (mapreduce.fileoutputcommitter.marksuccessfuljobs=false — keying
-    * on the absent marker there made every run silently rebuild,
-    * review r11) it falls back to committed part-files, the strongest
-    * signal that configuration leaves (ADVICE r11 tightened the
-    * marker-on path: part-files alone are not crash-safe under
-    * committer v2). */
-  def exists(spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
-    // the layout-epoch guard (r14: the assigned table went sharded)
-    // lives inside metaIfComplete: an index saved under the old flat
-    // layout reads as incomplete and rebuilds once, instead of load()
-    // failing on the missing shard column; same one-redundant-rebuild
-    // trade committedParquetExists already documents for the
-    // markers-off corner
-    metaIfComplete(spark, path).isDefined
-
   /** Reload a [[save]]d index. Centroids are re-materialized driver-side
     * (they are broadcast into every probe join); the assigned corpus
-    * stays a lazy parquet scan, optionally persisted for repeated
-    * query batches. */
+    * stays a lazy parquet scan of the committed live shards, optionally
+    * persisted for repeated query batches. */
   def load(spark: org.apache.spark.sql.SparkSession, path: String,
       persist: Boolean = true): IvfIndex = {
-    val (cells, shards, base, _) = readMetaNamed(spark, path)
+    val meta = readMeta(spark, path)
     val centMat = centroidsLocal(spark, path)
-    // committed LIVE shards only: an orphan dir from a crashed append
-    // (above the frontier) or a compacted-away dir from a crashed
-    // cleanup (below base) is partition-pruned at planning
-    val assigned0 = spark.read.parquet(s"$path/assigned")
-      .filter(col("shard") >= base && col("shard") <= shards)
+    val assigned0 = IndexLayout.live(spark, s"$path/assigned", meta)
       .select("id", "cell", "vec", "nrm")
     val assigned =
       if (persist)
         assigned0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else assigned0
-    new IvfIndex(centMat, assigned, cells, persist)
+    new IvfIndex(centMat, assigned, meta.cells, persist)
   }
 
   /** Fold new vectors into a [[IvfIndex.save]]d index WITHOUT
@@ -1488,17 +1246,13 @@ object IvfIndex {
     * the build input was — assignment and scoring both assume it). */
   def append(delta: DataFrame, path: String, tag: String = ""): Unit = {
     val spark = delta.sparkSession
-    val metaOpt = metaIfComplete(spark, path)
-    require(metaOpt.isDefined,
-      s"ivf index at '$path' is missing or incomplete " +
-        "(no committed meta table - saves write it last)")
-    val meta = metaOpt.get
+    val meta = layout.requireMeta(spark, path)
     if (tag.nonEmpty && tag == meta.tag) return // retry of an applied append
     val centMat = centroidsLocal(spark, path)
     val d = Similarity.spreadDf(delta)
       .select(col("id"), Similarity.toDouble(col("vec")).as("vec"))
     // write sized from the plan estimate, not the spread's core count
-    // (guide §6; the BqIndex.sizedForWrite rationale)
+    // (guide §6; see sizedForWrite)
     sizedForWrite(Similarity.assignCell(centMat, d, "id", "vec")
         .withColumn("nrm", Similarity.norm(col("vec"))))
       .write.mode("overwrite").parquet(s"$path/assigned/shard=${meta.shards + 1}")
@@ -1509,50 +1263,20 @@ object IvfIndex {
       expect = meta, what = "ivf append")
   }
 
-  /** Per-shard centroid-drift telemetry for a saved (possibly
-    * appended) index — the REBUILD-decision input (VERDICT r14 #4):
-    * frozen-centroid appends are correct but silently lossy when the
-    * incoming distribution shifts away from the build corpus (deltas
-    * land in ill-fitting cells, cell-pruning recall decays with no
-    * error anywhere). One row per committed shard:
-    * `(shard, n, mean_residual, drift_ratio)` where mean_residual is
-    * the mean ||vec − centroid(cell)|| over the shard's rows and
-    * drift_ratio normalizes it by shard 0's (the build corpus — 1.0
-    * by definition).
-    *
-    * Rebuild rule (documented, data-driven): retrain when a shard's
-    * drift_ratio exceeds ~1.5 — residuals 50% above the build's mean
-    * put delta rows materially farther from every centroid than the
-    * population the cell geometry was trained on, which is where
-    * probed-cell recall starts paying. In-distribution appends sit
-    * near 1.0 (sampling noise only).
-    *
-    * Scale shape: centroids broadcast; ONE scan of the assigned table
-    * (cell is stored, no re-assignment); the aggregation shuffles one
-    * (shard, sum, count) row per shard after map-side partials. */
-  def driftStats(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    require(exists(spark, path),
-      s"ivf index at '$path' is missing or incomplete " +
-        "(no committed meta table - saves write it last)")
-    val (_, shards, base, _) = readMetaNamed(spark, path)
-    driftStatsFor(spark, path, shards, base)
-  }
-
-  /** [[driftStats]] body for callers that already hold the committed
-    * meta (r16 review F6: maintain() read the meta three times per
-    * pass — its own planning read, exists(), and readMetaNamed). */
-  private[ops] def driftStatsFor(spark: org.apache.spark.sql.SparkSession,
-      path: String, shards: Int, base: Int): DataFrame = {
+  /** [[driftStats]] over the assigned table. Scale shape: centroids
+    * broadcast; ONE scan of the assigned table (cell is stored, no
+    * re-assignment); the aggregation shuffles one (shard, sum, count)
+    * row per shard after map-side partials. */
+  private[ops] def driftFor(spark: org.apache.spark.sql.SparkSession,
+      path: String, meta: IdxMeta): DataFrame = {
     val cent = centroidsLocal(spark, path)
-    val res = spark.read.parquet(s"$path/assigned")
-      .filter(col("shard") >= base && col("shard") <= shards)
+    val res = IndexLayout.live(spark, s"$path/assigned", meta)
       .select(col("shard"), col("cell"), col("vec"))
       .join(broadcast(cent), "cell")
       .select(col("shard"), Similarity.norm(
         graft.functions.CatalystFunctions.vecSub(col("vec"), col("cvec")))
         .as("__res"))
-    shardDrift(res, base)
+    shardDrift(res, meta.base)
   }
 
   /** Per-shard recall@k of an index's own (approximate) query path
@@ -1573,17 +1297,16 @@ object IvfIndex {
     * so every shard reads exactly 1.0. */
   def probeRecall(spark: org.apache.spark.sql.SparkSession, path: String,
       k: Int = 5, perShard: Int = 20, nProbe: Int = 0): DataFrame = {
-    require(exists(spark, path),
-      s"ivf index at '$path' is missing or incomplete " +
-        "(no committed meta table - saves write it last)")
-    val (_, shards, base, _) = readMetaNamed(spark, path)
-    val assigned = spark.read.parquet(s"$path/assigned")
-      .filter(col("shard") >= base && col("shard") <= shards)
+    val meta = layout.requireMeta(spark, path)
+    val assigned = IndexLayout.live(spark, s"$path/assigned", meta)
       .select(col("shard"), col("id"), col("vec"))
     val idx = load(spark, path, persist = false)
     recallByShard(spark, assigned,
       q => idx.query(q, k, nProbe), k, perShard)
   }
+
+  private[ops] def recallAt(spark: org.apache.spark.sql.SparkSession,
+      path: String, k: Int): DataFrame = probeRecall(spark, path, k)
 
   /** The sampling + scoring half of [[probeRecall]], shared with the
     * PQ/SQ surfaces: `corpus` is (shard, id, vec) committed rows,
@@ -1638,40 +1361,6 @@ object IvfIndex {
         round(col("__mr"), 6).as("mean_residual"),
         round(col("__mr") / col("__base"), 4).as("drift_ratio"))
       .orderBy("shard")
-  }
-
-  /** [[driftStats]] for the PQ/SQ layouts (shared by
-    * [[IvfPq.driftStats]] and [[IvfSq.driftStats]]): those store unit
-    * vectors in a `corpus` table WITHOUT the cell column, so the
-    * assignment re-derives from the frozen centroids — bit-identical
-    * to the stored one (same deterministic max-dot rule) and cheaper
-    * than an id-join against `encoded` (map-side partial aggregation
-    * of the scored crossJoin vs a full shuffle of both tables). */
-  private[ops] def corpusDriftStats(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    val (_, shards, base, _) = readMetaNamed(spark, path)
-    corpusDriftStatsFor(spark, path, shards, base)
-  }
-
-  /** [[corpusDriftStats]] for callers already holding the committed
-    * meta (the maintain() one-read rule, r16 review F6). */
-  private[ops] def corpusDriftStatsFor(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String, shards: Int, base: Int): DataFrame = {
-    val centMat = centroidsLocal(spark, path)
-    val res = spark.read.parquet(s"$path/corpus")
-      .filter(col("shard") >= base && col("shard") <= shards)
-      .select(col("shard"), col("id"), col("vec"))
-      .crossJoin(broadcast(centMat))
-      .withColumn("__score", Similarity.dot(col("vec"), col("cvec")))
-      .groupBy(col("id"))
-      .agg(first(col("shard")).as("shard"),
-        max_by(col("cvec"), struct(col("__score"), -col("cell"))).as("__c"),
-        first(col("vec")).as("vec"))
-      .select(col("shard"), Similarity.norm(
-        graft.functions.CatalystFunctions.vecSub(col("vec"), col("__c")))
-        .as("__res"))
-    shardDrift(res, base)
   }
 
   /** Index `corpus` (id, vec) rows. `nCells` <= 0 auto-sizes to

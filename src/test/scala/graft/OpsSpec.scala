@@ -3765,6 +3765,53 @@ class OpsSpec extends SparkSpec {
       Set((Some(1), None), (None, Some("b"))))
   }
 
+  test("MetaIo torn write (ADVICE r19): with success markers off, a " +
+      "meta write that dies mid-file is never graded committed, and " +
+      "MetaSwap's heal discards it instead of promoting it over main") {
+    import graft.ops.{MetaIo, MetaSwap}
+    import spark.implicits._
+    val metaDir = tmpDir("metaio-torn") + "/meta"
+    val next = metaDir + ".next"
+    def metaRow(shards: Int) = Seq((4, shards, "t", 0, "", 7L))
+      .toDF("n_cells", "shards", "tag", "base", "rot", "epoch")
+    def shardsRead() = MetaIo.readHead(spark, MetaSwap.readDir(spark, metaDir))
+      .getAs[Int]("shards")
+    MetaSwap.commit(metaRow(1), metaDir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val tmp = new org.apache.hadoop.fs.Path(next, MetaIo.tmpPartName)
+    val fs = tmp.getFileSystem(conf)
+    val key = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+    conf.setBoolean(key, false)
+    try {
+      // a writer that fails after its first row leaves only the hidden
+      // in-progress file behind: no part file, no _SUCCESS
+      intercept[Exception] {
+        MetaIo.writeRows(spark, next, metaRow(2).schema, Seq(
+          org.apache.spark.sql.Row(4, 2, "t", 0, "", 7L),
+          org.apache.spark.sql.Row(4, "torn", "t", 0, "", 7L)))
+      }
+      assert(fs.exists(tmp))
+      assert(MetaSwap.readDir(spark, metaDir) == metaDir,
+        "an interrupted .next write must not grade committed")
+      assert(shardsRead() == 1)
+      // the same after a crash mid-file: truncate the in-progress file
+      val local = java.nio.file.Paths.get(tmp.toString)
+      val bytes = java.nio.file.Files.readAllBytes(local)
+      java.nio.file.Files.write(local, bytes.take(bytes.length / 2))
+      assert(MetaSwap.readDir(spark, metaDir) == metaDir,
+        "a truncated .next write must not grade committed")
+      // the writer-side heal discards the torn .next, main stands
+      MetaSwap.heal(spark, metaDir)
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(next)))
+      assert(shardsRead() == 1)
+      // and the next commit lands whole, with no in-progress residue
+      MetaSwap.commit(metaRow(3), metaDir)
+      assert(shardsRead() == 3)
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(metaDir,
+        MetaIo.tmpPartName)))
+    } finally conf.unset(key)
+  }
+
   test("sizedForWrite (ADVICE r18, overflow): an unknown-size estimate " +
       "(Long.MaxValue stats fallback) keeps the spread instead of " +
       "funneling the write through coalesce(1)") {
